@@ -12,10 +12,13 @@ Pipeline shape (all three stages are the right shape for 100 TB):
    computed driver-side from the two B-sized count relations (the
    sketch-collect precedent: driver state bounded by B, never by n).
 2. ``dsir_score`` — per-document log importance weight
-   log w(doc) = Σ_tokens lr_{hash(token)}: the vector rides into the
-   plan as ONE broadcast literal array and the sum folds per token
-   exactly like text.hash_score — zero shuffle, O(tokens) codegen,
-   embarrassingly parallel.
+   log w(doc) = Σ_tokens lr_{hash(token)}: batch frames score in ONE
+   mapInArrow pass that closes over the B-sized vector, hashes each
+   Arrow batch's distinct features only and folds every document
+   left-to-right — zero shuffle, no join, embarrassingly parallel.
+   ``arrow=False`` keeps the expression fold over a 1-row broadcast
+   relation, and streaming frames fold over a literal array; both
+   give bit-identical rows.
 3. ``dsir_resample`` — sample k docs WITHOUT replacement with
    probability ∝ exp(log w) via Gumbel-top-k: key = log w + g where
    g = -ln(-ln(u)) and u is the deterministic md5-fraction of the doc
@@ -138,7 +141,8 @@ def fit_dsir(
 
     i.e. the log ratio of add-α smoothed hashed-feature probabilities.
     Two B-sized count aggregations; the vector itself is driver-sized
-    (B doubles) and broadcasts into scoring as a literal array.
+    (B doubles) and ships to dsir_score, whose Arrow pass closes over
+    it (the ``arrow=False`` and streaming paths carry it in the plan).
     ``bigrams=True`` hashes adjacent word pairs alongside the unigrams
     (the paper's hashed n-gram feature set); fit and scoring must use
     the same setting.
@@ -303,8 +307,9 @@ def dsir_score(
     hash only distinct CODE PAIRS, and the per-document sum replays
     Spark's aggregate() fold strictly left-to-right (tokens then
     bigrams), so every double is bit-identical to the expression path
-    (parity test: tests/test_dsir.py::test_arrow_score_matches_
-    expression_path). Rounding stays in the JVM on the raw sums.
+    (parity test:
+    tests/test_dsir.py::test_arrow_score_matches_expression_path).
+    Rounding stays in the JVM on the raw sums.
 
     ``arrow=False`` keeps the round-13 expression fold (the lr vector
     as a 1-row broadcast relation); streaming frames always use the

@@ -220,3 +220,54 @@ def test_score_survives_caller_column_collisions(spark, sf_dir):
         poisoned = docs.withColumn(clash, F.lit([0.0]))
         got = {r["doc_id"]: r["logw"] for r in D.dsir_score(poisoned, lrs).collect()}
         assert got == base, clash
+
+
+def test_arrow_score_matches_expression_path(spark, sf_dir):
+    """The default mapInArrow scoring pass and the arrow=False
+    expression fold give EXACTLY equal rows — every double, not just
+    the 4-dp rounding — over real docs plus the edge texts (NULL,
+    empty, whitespace-only, tab/newline, non-ASCII, one multi-thousand
+    token document), with and without bigrams. The plan-level
+    difference between the two paths is the 1-row lr-vector broadcast
+    join that only the expression path plans."""
+    from sgdnet_spark.plans import introspect
+
+    # a varied vector: every bucket a distinct, non-representable-in-
+    # decimal double, so any change in summation order shows in the bits
+    lr = [math.sin(j + 0.5) * 3.0 for j in range(_B)]
+    long_doc = "\n".join(
+        " ".join(f"Tok{(i * 7919 + k) % 613}" for k in range(50))
+        for i in range(80)
+    )  # 4000 tokens, 613-term vocabulary
+    edge = spark.createDataFrame(
+        [
+            (900_000_001, None),
+            (900_000_002, ""),
+            (900_000_003, "  \t\n "),
+            (900_000_004, "\tTabbed\tDoc\nwith  NEWLINES \r\n"),
+            (900_000_005, "Café ÜBER naïve café"),
+            (900_000_006, "single"),
+            (900_000_007, long_doc),
+        ],
+        "doc_id long, text string",
+    )
+    docs = _docs(spark, sf_dir).select("doc_id", "text").limit(40)
+    frame = docs.unionByName(edge)
+
+    def score(arrow, bigrams):
+        # rpos=30 makes the JVM round the identity on every double of
+        # magnitude >= 1e-13 (all of these sums), so the raw fold sums
+        # themselves are compared, not just their shipped 4-dp form
+        return D.dsir_score(frame, lr, salt=_SALT, rpos=30,
+                            bigrams=bigrams, arrow=arrow)
+
+    for bigrams in (False, True):
+        # plan alone, nothing executed
+        assert introspect.broadcast_join_count(score(False, bigrams)) == 1
+        assert introspect.broadcast_join_count(score(True, bigrams)) == 0
+        got = sorted(tuple(r) for r in score(True, bigrams).collect())
+        want = sorted(tuple(r) for r in score(False, bigrams).collect())
+        assert got == want, bigrams
+        n_tokens = {r[0]: r[1] for r in got}
+        assert 900_000_001 not in n_tokens and len(got) == 46
+        assert n_tokens[900_000_007] == 4000 + (3999 if bigrams else 0)
