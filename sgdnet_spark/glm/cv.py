@@ -18,6 +18,8 @@ materialize).
 
 from __future__ import annotations
 
+import functools
+import operator
 from dataclasses import dataclass
 from typing import Iterator, Sequence
 
@@ -29,7 +31,7 @@ from pyspark.sql import functions as F
 from sgdnet_spark.glm import path as path_mod
 from sgdnet_spark.glm.score import score
 from sgdnet_spark.glm.sgdnet import SgdnetFit, sgdnet
-from sgdnet_spark.glm.suffstats import Moments, xcols, ycols
+from sgdnet_spark.glm.suffstats import Moments, moments_kernel, xcols, ycols
 
 FOLD_COL = "__fold"
 
@@ -137,17 +139,7 @@ def _fold_moments(
             y = pdf[yc].to_numpy(dtype=np.float64)
             for fv in np.unique(folds):
                 m = folds == fv
-                xm, ym = x[m], y[m]
-                part = np.concatenate(
-                    [
-                        [float(len(ym))],
-                        xm.sum(axis=0),
-                        ym.sum(axis=0),
-                        (xm.T @ xm).ravel(),
-                        (xm.T @ ym).ravel(),
-                        (ym * ym).sum(axis=0),
-                    ]
-                )
+                part = moments_kernel(x[m], y[m], None, None)
                 key = int(fv)
                 accs[key] = part if key not in accs else accs[key] + part
         for key, acc in accs.items():
@@ -160,24 +152,7 @@ def _fold_moments(
     for r in rows:
         part = np.asarray(r["partial"])
         packed[r["fold"]] = part if r["fold"] not in packed else packed[r["fold"]] + part
-    out: dict[int, Moments] = {}
-    for fold, v in packed.items():
-        i = 0
-        n = int(round(v[0])); i += 1
-        sum_x = v[i : i + p]; i += p
-        sum_y = v[i : i + k]; i += k
-        sum_xx = v[i : i + p * p].reshape(p, p); i += p * p
-        sum_xy = v[i : i + p * k].reshape(p, k); i += p * k
-        sum_yy = v[i : i + k]
-        out[fold] = Moments(n, sum_x, sum_y, sum_xx, sum_xy, sum_yy)
-    return out
-
-
-def _mom_sub(a: Moments, b: Moments) -> Moments:
-    return Moments(
-        a.n - b.n, a.sum_x - b.sum_x, a.sum_y - b.sum_y,
-        a.sum_xx - b.sum_xx, a.sum_xy - b.sum_xy, a.sum_yy - b.sum_yy,
-    )
+    return {fold: Moments.unpack(v, p, k) for fold, v in packed.items()}
 
 
 def _mom_mse(mom: Moments, a0: np.ndarray, beta: np.ndarray) -> float:
@@ -220,13 +195,7 @@ def _cv_gram_fast(
     """All (alpha × fold × lambda) ridge/lasso fits + held-out mse from
     the per-fold moments — zero additional data passes."""
     folds = sorted(fold_moms)
-    total = fold_moms[folds[0]]
-    for g in folds[1:]:
-        mom = fold_moms[g]
-        total = Moments(
-            total.n + mom.n, total.sum_x + mom.sum_x, total.sum_y + mom.sum_y,
-            total.sum_xx + mom.sum_xx, total.sum_xy + mom.sum_xy, total.sum_yy + mom.sum_yy,
-        )
+    total = functools.reduce(operator.add, (fold_moms[g] for g in folds))
     p = len(feature_cols)
     kw = dict(fit_kwargs)
     kw.setdefault("lambda_min_ratio", 0.01 if total.n < p else 1e-4)
@@ -252,7 +221,7 @@ def _cv_gram_fast(
         )
         raw = np.full((len(folds), len(res.lambdas)), np.nan)
         for j, g in enumerate(folds):
-            train = _mom_sub(total, fold_moms[g])
+            train = total - fold_moms[g]
             res_g = driver(_MomProvider(), alpha=a, lambdas=res.lambdas, mom=train, **kw)
             test = fold_moms[g]
             for i in range(len(res_g.lambdas)):

@@ -4,10 +4,18 @@
 passes (scales to arbitrary n; the 100 TB path). ``LocalXY`` is the
 driver fast path used when n*p is small enough to collect — the same
 decision Spark MLlib makes between normal-equation and iterative solvers.
-Both produce bit-identical statistics, which the tests assert.
+
+Every pass statistic is ONE ``suffstats`` kernel over a block of rows;
+the providers differ only in where it runs (Spark Arrow batches vs row
+blocks of the driver's cached standardized X), so their statistics
+differ only in floating-point summation order across batches and
+blocks. tests/test_distributed_solver.py compares every pass between
+the two at relative 1e-10.
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -20,7 +28,7 @@ _POOL = None
 
 
 def _irls_pool():
-    """Shared driver thread pool for blocked IRLS passes (one per
+    """Shared driver thread pool for the blocked passes (one per
     process, lazily built — a per-fit pool would leak 8 threads per fit
     across a long session). numpy ufuncs and BLAS release the GIL over
     contiguous float blocks, so plain threads scale these passes."""
@@ -32,12 +40,6 @@ def _irls_pool():
             max_workers=LocalXY._IRLS_THREADS, thread_name_prefix="sgdnet-irls"
         )
     return _POOL
-
-
-def _softmax(eta: np.ndarray) -> np.ndarray:
-    m = eta.max(axis=1, keepdims=True)
-    e = np.exp(eta - m)
-    return e / e.sum(axis=1, keepdims=True)
 
 
 class LocalXY:
@@ -80,126 +82,24 @@ class LocalXY:
     def has_offset(self) -> bool:
         return self.o is not None
 
-    def moments_diag(self) -> Moments:
-        # honor the O(p) contract: no p×p Gram even on the local
-        # provider (a wide-p collect that fit the n·p budget would
-        # otherwise allocate p² bytes here)
-        self.passes += 1
-        x, y = self.x, self.y
-        xw = x if self.w is None else x * self.w[:, None]
-        yw = y if self.w is None else y * self.w[:, None]
-        return Moments(
-            n=self.n,
-            sum_x=xw.sum(axis=0),
-            sum_y=yw.sum(axis=0),
-            sum_xx=(xw * x).sum(axis=0),  # 1-D diagonal
-            sum_xy=xw.T @ y,
-            sum_yy=(yw * y).sum(axis=0),
-        )
-
-    def moments(self) -> Moments:
-        self.passes += 1
-        x, y = self.x, self.y
-        if self.w is None:
-            xw, yw = x, y
-        else:
-            xw, yw = x * self.w[:, None], y * self.w[:, None]
-        return Moments(
-            n=self.n,
-            sum_x=xw.sum(axis=0),
-            sum_y=yw.sum(axis=0),
-            sum_xx=xw.T @ x,
-            sum_xy=xw.T @ y,
-            sum_yy=(yw * y).sum(axis=0),
-        )
-
     def set_standardization(self, x_mean: np.ndarray, x_inv_std: np.ndarray) -> None:
         self.x_mean = x_mean
         self.x_inv_std = x_inv_std
         self._xs_cache: np.ndarray | None = None
 
     def _xs(self) -> np.ndarray:
-        # standardized X is reused by every IRLS pass — cache it (the raw
+        # standardized X is reused by every pass — cache it (the raw
         # collect already fit in the driver budget; one more copy does too)
         if getattr(self, "_xs_cache", None) is None:
             self._xs_cache = (self.x - self.x_mean) * self.x_inv_std
         return self._xs_cache
 
-    def gradient_gaussian(self, coef: np.ndarray, intercept: float):
-        self.passes += 1
-        xs = self._xs()
-        r = xs @ coef + intercept - self.y[:, 0]
-        rw = r if self.w is None else r * self.w
-        return xs.T @ rw / self.n, float(rw.sum()) / self.n, float(rw @ r) / self.n
-
-    def cov_vec(self, v: np.ndarray) -> np.ndarray:
-        self.passes += 1
-        xs = self._xs()
-        u = xs @ v
-        if self.w is not None:
-            u = u * self.w
-        return xs.T @ u / self.n
-
-    def grad_binomial(self, coef: np.ndarray, b0: float):
-        """Logistic gradient (standardized scale); y is the 0/1 column."""
-        self.passes += 1
-        xs = self._xs()
-        yb = self.y[:, 0]
-        eta = xs @ coef + b0
-        if self.o is not None:
-            eta = eta + self.o
-        mu = 1.0 / (1.0 + np.exp(-eta))
-        r = mu - yb
-        ll_terms = yb * eta - np.logaddexp(0.0, eta)
-        if self.w is not None:
-            r = r * self.w
-            ll_terms = ll_terms * self.w
-        ll = float(ll_terms.sum())
-        return xs.T @ r / self.n, float(r.sum() / self.n), ll
-
-    def grad_poisson(self, coef: np.ndarray, b0: float):
-        """Poisson (log link) gradient: (x̃ᵀ w̃(mu-y)/n, mean resid, dev)."""
-        self.passes += 1
-        xs = self._xs()
-        yb = self.y[:, 0]
-        eta = xs @ coef + b0
-        if self.o is not None:
-            eta = eta + self.o
-        mu = np.exp(eta)
-        r = mu - yb
-        with np.errstate(divide="ignore", invalid="ignore"):
-            ylogy = np.where(yb > 0, yb * np.log(yb / np.maximum(mu, 1e-300)), 0.0)
-        dev_terms = 2.0 * (ylogy - (yb - mu))
-        if self.w is not None:
-            r = r * self.w
-            dev_terms = dev_terms * self.w
-        return xs.T @ r / self.n, float(r.sum() / self.n), float(dev_terms.sum())
-
-    def grad_multinomial(self, coefs: np.ndarray, b0s: np.ndarray):
-        """Softmax gradient for all classes; self.y is one-hot (n, k).
-        ``self.o`` (when 2-d) is the fixed n×k multinomial offset."""
-        self.passes += 1
-        xs = self._xs()
-        eta = xs @ coefs.T + b0s
-        if self.o is not None:
-            eta = eta + self.o
-        P = _softmax(eta)
-        R = P - self.y
-        ll_terms = np.sum(self.y * np.log(np.maximum(P, 1e-300)), axis=1)
-        if self.w is not None:
-            R = R * self.w[:, None]
-            ll_terms = ll_terms * self.w
-        G = (R.T @ xs) / self.n
-        ll = float(ll_terms.sum())
-        return G, R.sum(axis=0) / self.n, ll
-
-    # rows per block in the fused IRLS passes: big enough that the p-sized
-    # BLAS calls amortize, small enough that every per-block temporary
+    # rows per block in the passes: big enough that the p-sized BLAS
+    # calls amortize, small enough that every per-block temporary
     # (~10 arrays x 8B x block) stays cache/TLB-resident instead of
     # cycling hundreds of MB of fresh allocations per pass (at n=6M the
-    # unchunked pass allocated an n x p weighted copy of X every call —
-    # profiled 0.68s/pass; chunked ~0.2s/pass, identical statistics up to
-    # float summation order)
+    # unchunked IRLS pass allocated an n x p weighted copy of X every
+    # call — profiled 0.68s/pass; chunked ~0.2s/pass)
     _IRLS_BLOCK = 1 << 18
     # driver threads for the blocked passes: numpy ufuncs (exp/log/mul)
     # and BLAS release the GIL over contiguous float blocks, so the
@@ -208,105 +108,85 @@ class LocalXY:
     # reduced in a fixed left-fold, identical to the sequential loop.
     _IRLS_THREADS = 8
 
-    def _blocked_pass(self, block_fn, p: int):
-        """Run block_fn(start, end) -> (W, sx, XtWX, XtWz, wz, stat) over
-        all row blocks (threaded when the data is big enough) and reduce
-        the partials in block order."""
-        B = self._IRLS_BLOCK
-        bounds = [(s, min(s + B, self.n)) for s in range(0, self.n, B)]
-        if len(bounds) > 1 and self._IRLS_THREADS > 1:
-            partials = list(_irls_pool().map(lambda se: block_fn(*se), bounds))
+    def _blocked_pass(self, kernel, *args, cols=None, raw=False) -> np.ndarray:
+        """The driver reducer: sum ``kernel(x, y, w, o, *args)`` (a
+        suffstats kernel) over row blocks of the cached standardized X —
+        raw X when ``raw`` — in block order, threaded when there is more
+        than one block. ``cols`` slices each block to the screened
+        features, never the full n x |S| copy."""
+        x = self.x if raw else self._xs()
+
+        def block(s):
+            e = s + self._IRLS_BLOCK
+            return kernel(
+                x[s:e] if cols is None else x[s:e, cols], self.y[s:e],
+                None if self.w is None else self.w[s:e],
+                None if self.o is None else self.o[s:e], *args,
+            )
+
+        starts = range(0, self.n, self._IRLS_BLOCK)
+        if len(starts) > 1 and self._IRLS_THREADS > 1:
+            partials = list(_irls_pool().map(block, starts))
         else:
-            partials = [block_fn(s, e) for s, e in bounds]
-        W_sum = 0.0
-        stat = 0.0
-        wz_sum = 0.0
-        sx = np.zeros(p)
-        XtWX = np.zeros((p, p))
-        XtWz = np.zeros(p)
-        for pw, psx, pxx, pxz, pwz, pst in partials:
-            W_sum += pw
-            sx += psx
-            XtWX += pxx
-            XtWz += pxz
-            wz_sum += pwz
-            stat += pst
-        return W_sum, sx, XtWX, XtWz, wz_sum, stat
+            partials = [block(s) for s in starts]
+        return functools.reduce(np.add, partials)
+
+    def moments(self) -> Moments:
+        self.passes += 1
+        return Moments.unpack(self._blocked_pass(suffstats.moments_kernel, raw=True),
+                              self.p, self.y.shape[1])
+
+    def moments_diag(self) -> Moments:
+        # honor the O(p) contract: no p×p Gram even on the local
+        # provider (a wide-p collect that fit the n·p budget would
+        # otherwise allocate p² bytes here)
+        self.passes += 1
+        return Moments.unpack(self._blocked_pass(suffstats.moments_kernel, True, raw=True),
+                              self.p, self.y.shape[1], diag=True)
+
+    def gradient_gaussian(self, coef: np.ndarray, intercept: float):
+        self.passes += 1
+        out = self._blocked_pass(suffstats.grad_kernel, coef, intercept, "gaussian")
+        return suffstats.unpack_grad(out, self.p, "gaussian")
+
+    def cov_vec(self, v: np.ndarray) -> np.ndarray:
+        self.passes += 1
+        return suffstats.unpack_cov(self._blocked_pass(suffstats.cov_kernel, v), self.p)
+
+    def grad_binomial(self, coef: np.ndarray, b0: float):
+        """Logistic gradient (standardized scale); y is the 0/1 column."""
+        self.passes += 1
+        out = self._blocked_pass(suffstats.grad_kernel, coef, b0, "binomial")
+        return suffstats.unpack_grad(out, self.p, "binomial")
+
+    def grad_poisson(self, coef: np.ndarray, b0: float):
+        """Poisson (log link) gradient: (x̃ᵀ w̃(mu-y)/n, mean resid, dev)."""
+        self.passes += 1
+        out = self._blocked_pass(suffstats.grad_kernel, coef, b0, "poisson")
+        return suffstats.unpack_grad(out, self.p, "poisson")
+
+    def grad_multinomial(self, coefs: np.ndarray, b0s: np.ndarray):
+        """Softmax gradient for all classes; self.y is one-hot (n, k).
+        ``self.o`` (when 2-d) is the fixed n×k multinomial offset."""
+        self.passes += 1
+        out = self._blocked_pass(suffstats.grad_multinomial_kernel, coefs, b0s)
+        return suffstats.unpack_grad_multinomial(out, self.p, coefs.shape[0])
 
     def irls_binomial(self, coef: np.ndarray, intercept: float, cols=None):
-        # hot loop: ~3 calls per lambda over the full n — one fused,
-        # BLOCKED pass accumulates every WLS statistic. cols (strong-rule
+        # hot loop: ~3 calls per lambda over the full n. cols (strong-rule
         # screening): quadratic stats restricted to the given feature
         # subset — coef is then |cols|-sized and O(n·|S|²) replaces
-        # O(n·p²); the column subset is sliced per block, never as a
-        # full n x |S| copy.
+        # O(n·p²).
         self.passes += 1
-        xs_full = self._xs()
-        yb = self.y[:, 0]
-
-        def block(s, e):
-            xb = xs_full[s:e] if cols is None else xs_full[s:e, cols]
-            eta = xb @ coef + intercept
-            if self.o is not None:
-                eta += self.o[s:e]
-            mu = 1.0 / (1.0 + np.exp(-eta))
-            w = np.maximum(mu * (1.0 - mu), 1e-10)
-            z = eta + (yb[s:e] - mu) / w
-            if self.o is not None:
-                z -= self.o[s:e]  # the WLS solve targets eta MINUS the offset
-            # ll = Σ y·η − Σ log(1+e^η), via logaddexp EXACTLY as the
-            # distributed kernel (suffstats.weighted_quadratic) computes
-            # it — a log(max(mu, 1e-300)) shortcut diverges from the
-            # Spark path for η < −691 (quasi-separable fits), breaking
-            # the bit-identical-statistics contract between strategies
-            llt = yb[s:e] * eta - np.logaddexp(0.0, eta)
-            if self.w is not None:
-                sw = self.w[s:e]
-                llt = llt * sw
-                w = w * sw
-            xw = xb * w[:, None]
-            return (
-                float(w.sum()), xw.sum(axis=0), xw.T @ xb, xw.T @ z,
-                float((w * z).sum()), float(llt.sum()),
-            )
-
-        return self._blocked_pass(block, coef.shape[0])
+        out = self._blocked_pass(suffstats.irls_kernel, coef, intercept, "binomial", cols=cols)
+        return suffstats.unpack_irls(out, coef.shape[0])
 
     def irls_poisson(self, coef: np.ndarray, intercept: float, cols=None):
-        """One IRLS pass for poisson (log link): mu = exp(eta), wirls =
-        mu, z = (eta - o) + (y - mu)/mu; the fit statistic is the
-        (positive) deviance 2 Σ w̃ [y log(y/mu) - (y - mu)]. ``cols``
-        restricts the quadratic to a screened feature subset. Blocked
-        exactly like irls_binomial (same rationale)."""
+        """One IRLS pass for poisson (log link); the fit statistic is the
+        (positive) deviance. ``cols`` as in irls_binomial."""
         self.passes += 1
-        xs_full = self._xs()
-        yb = self.y[:, 0]
-
-        def block(s, e):
-            xb = xs_full[s:e] if cols is None else xs_full[s:e, cols]
-            ybl = yb[s:e]
-            eta = xb @ coef + intercept
-            if self.o is not None:
-                eta += self.o[s:e]
-            mu = np.exp(eta)
-            w = np.maximum(mu, 1e-10)
-            z = eta + (ybl - mu) / w
-            if self.o is not None:
-                z -= self.o[s:e]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                ylogy = np.where(ybl > 0, ybl * np.log(ybl / np.maximum(mu, 1e-300)), 0.0)
-            dev_terms = 2.0 * (ylogy - (ybl - mu))
-            if self.w is not None:
-                sw = self.w[s:e]
-                dev_terms = dev_terms * sw
-                w = w * sw
-            xw = xb * w[:, None]
-            return (
-                float(w.sum()), xw.sum(axis=0), xw.T @ xb, xw.T @ z,
-                float((w * z).sum()), float(dev_terms.sum()),
-            )
-
-        return self._blocked_pass(block, coef.shape[0])
+        out = self._blocked_pass(suffstats.irls_kernel, coef, intercept, "poisson", cols=cols)
+        return suffstats.unpack_irls(out, coef.shape[0])
 
     def poisson_null_intercept(self) -> float:
         """Closed-form weighted intercept-only poisson MLE with offset:
@@ -321,11 +201,8 @@ class LocalXY:
     def irls_multinomial_all(self, coefs: np.ndarray, intercepts: np.ndarray):
         """IRLS stats for all classes at once; self.y is one-hot (n, k)."""
         self.passes += 1
-        out = suffstats.multinomial_class_stats(
-            self.x, self.y, coefs, intercepts, self.x_mean, self.x_inv_std,
-            sw=self.w, o=self.o,
-        )
-        return suffstats._unpack_class_stats(out, self.p, coefs.shape[0])
+        out = self._blocked_pass(suffstats.irls_multinomial_kernel, coefs, intercepts)
+        return suffstats.unpack_irls_multinomial(out, self.p, coefs.shape[0])
 
 
 class SparkXY:
@@ -398,8 +275,6 @@ class SparkXY:
         row = self.xy.agg(
             F.sum(w * F.col("y0")).alias("num"), F.sum(w * eo).alias("den")
         ).first()
-        import numpy as np
-
         return float(np.log(max(float(row["num"]), 1e-300) / max(float(row["den"]), 1e-300)))
 
     def gradient_gaussian(self, coef: np.ndarray, intercept: float):

@@ -18,7 +18,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sgdnet_spark.glm.suffstats import Moments
+from sgdnet_spark.glm.suffstats import (
+    Moments,
+    _sum_partials,
+    logistic_terms,
+    softmax_terms,
+    unpack_cov,
+    unpack_grad,
+    unpack_grad_multinomial,
+)
 
 IDX_COL = "__sp_idx"
 VAL_COL = "__sp_val"
@@ -40,72 +48,80 @@ def assemble_sparse(df: DataFrame, idx_col: str, val_col: str, label_col,
     return df.select(*cols)
 
 
-def _batch_csr(pdf: pd.DataFrame):
-    idx_lists = pdf[IDX_COL].to_numpy()
-    val_lists = pdf[VAL_COL].to_numpy()
-    lens = np.fromiter((len(a) for a in idx_lists), dtype=np.int64, count=len(idx_lists))
-    indptr = np.concatenate([[0], np.cumsum(lens)])
-    idx = np.concatenate(idx_lists.tolist()) if len(idx_lists) else np.zeros(0, dtype=np.int64)
-    val = np.concatenate(val_lists.tolist()) if len(val_lists) else np.zeros(0)
-    y = pdf[LBL_COL].to_numpy(dtype=np.float64)
-    w = pdf[W_COL].to_numpy(dtype=np.float64) if W_COL in pdf.columns else None
-    rows = np.repeat(np.arange(len(lens)), lens)
-    return idx.astype(np.int64), val, rows, indptr, y, w
+def _csr_batch(p: int):
+    """Arrow batch decoder -> (idx, val, rows, y, w) for the sparse
+    kernels: the batch's nonzeros as flat (feature index, value, row)
+    triplets."""
+
+    def decode(pdf: pd.DataFrame):
+        idx_lists = pdf[IDX_COL].to_numpy()
+        lens = np.fromiter((len(a) for a in idx_lists), dtype=np.int64, count=len(idx_lists))
+        idx = np.concatenate(idx_lists.tolist()).astype(np.int64)
+        val = np.concatenate(pdf[VAL_COL].to_numpy().tolist())
+        if len(idx):
+            # the input contract, enforced where it breaks: an index
+            # >= p lengthens bincount output and SHIFTS the packed
+            # partial's segments — partials then silently mis-sum
+            # (or fail with an inscrutable inhomogeneous-shape
+            # error when partitions disagree)
+            mx, mn = int(idx.max()), int(idx.min())
+            if mx >= p or mn < 0:
+                raise ValueError(
+                    f"sparse feature index out of range: saw {mn}..{mx} "
+                    f"but p={p} (indices must be in [0, p))"
+                )
+        y = pdf[LBL_COL].to_numpy(dtype=np.float64)
+        w = pdf[W_COL].to_numpy(dtype=np.float64) if W_COL in pdf.columns else None
+        rows = np.repeat(np.arange(len(lens)), lens)
+        return idx, val, rows, y, w
+
+    return decode
 
 
-def _sum_partials(df: DataFrame, fn, p: int | None = None) -> np.ndarray:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            batch = _batch_csr(pdf)
-            if p is not None and len(batch[0]):
-                # the input contract, enforced where it breaks: an index
-                # >= p lengthens bincount output and SHIFTS the packed
-                # partial's segments — partials then silently mis-sum
-                # (or fail with an inscrutable inhomogeneous-shape
-                # error when partitions disagree)
-                mx, mn = int(batch[0].max()), int(batch[0].min())
-                if mx >= p or mn < 0:
-                    raise ValueError(
-                        f"sparse feature index out of range: saw {mn}..{mx} "
-                        f"but p={p} (indices must be in [0, p))"
-                    )
-            part = fn(*batch)
-            acc = part if acc is None else acc + part
-        if acc is not None:
-            yield pd.DataFrame({"partial": [acc.tolist()]})
+def _onehot(y: np.ndarray, k: int) -> np.ndarray:
+    """(n, k) one-hot of the integer class-index labels."""
+    Y = np.zeros((len(y), k))
+    Y[np.arange(len(y)), y.astype(np.int64)] = 1.0
+    return Y
 
-    rows = df.mapInPandas(run, schema="partial array<double>").collect()
-    if not rows:
-        raise ValueError("empty input")
-    return np.sum([np.asarray(r["partial"]) for r in rows], axis=0)
+
+def _moments_kernel(idx, val, rows, y, w, p, k_onehot):
+    """Diag moments at nnz cost via scatter adds; y is the label column
+    itself (k_onehot None) or the class index of k_onehot one-hot columns."""
+    Y = y[:, None] if k_onehot is None else _onehot(y, k_onehot)
+    vw = val if w is None else val * w[rows]
+    Yw = Y if w is None else Y * w[:, None]
+    XY = np.stack([np.bincount(idx, weights=vw * Y[rows, c], minlength=p)
+                   for c in range(Y.shape[1])], axis=1)
+    return Moments(len(y), np.bincount(idx, weights=vw, minlength=p), Yw.sum(axis=0),
+                   np.bincount(idx, weights=vw * val, minlength=p), XY,
+                   (Yw * Y).sum(axis=0)).pack()
 
 
 def moments_diag_sparse(xy: DataFrame, p: int) -> Moments:
     """n, Σx, Σx² (diag), Σy, Σxy, Σy² — all via nnz-cost scatter adds."""
-
-    def fn(idx, val, rows, indptr, y, w):
-        vw = val if w is None else val * w[rows]
-        yw = y if w is None else y * w
-        sum_x = np.bincount(idx, weights=vw, minlength=p)
-        sum_xsq = np.bincount(idx, weights=vw * val, minlength=p)
-        sum_xy = np.bincount(idx, weights=vw * y[rows], minlength=p)
-        return np.concatenate(
-            [[float(len(y))], sum_x, sum_xsq, [yw.sum()], sum_xy, [(yw * y).sum()]]
-        )
-
-    out = _sum_partials(xy, fn, p)
-    i = 0
-    n = int(round(out[0])); i += 1
-    sum_x = out[i : i + p]; i += p
-    sum_xsq = out[i : i + p]; i += p
-    sum_y = out[i : i + 1]; i += 1
-    sum_xy = out[i : i + p].reshape(p, 1); i += p
-    sum_yy = out[i : i + 1]
+    out = _sum_partials(xy, _csr_batch(p), _moments_kernel, p, None)
     # 1-D diagonal (see Moments.xx_diag) — np.diag would be p^2 bytes
-    return Moments(n, sum_x, sum_y, sum_xsq, sum_xy, sum_yy)
+    return Moments.unpack(out, p, 1, diag=True)
+
+
+def _grad_kernel(idx, val, rows, y, w, p, scaled, off, m, inv, family):
+    """The gaussian / logistic gradient of suffstats.grad_kernel at nnz
+    cost: eta by scatter add, X̃ᵀr by the centering trick."""
+    eta = np.full(len(y), off)
+    np.add.at(eta, rows, val * scaled[idx])
+    if family == "gaussian":
+        r = eta - y
+        stat = r * r
+    else:
+        mu, stat = logistic_terms(eta, y)
+        r = mu - y
+    if w is not None:
+        r = r * w
+        stat = stat * w
+    xr = np.bincount(idx, weights=val * r[rows], minlength=p)
+    sum_r = r.sum()
+    return np.concatenate([(xr - m * sum_r) * inv, [sum_r, stat.sum(), float(len(y))]])
 
 
 def _densify(prov: "SparseSparkXY", p: int, k_onehot: int | None = None):
@@ -293,27 +309,16 @@ class SparseSparkXY:
         self.x_mean = x_mean
         self.x_inv_std = x_inv_std
 
-    def gradient_gaussian(self, coef: np.ndarray, intercept: float):
+    def _grad(self, coef: np.ndarray, b0: float, family: str):
         self.passes += 1
-        p = self.p
         scaled = coef * self.x_inv_std
-        off = intercept - float(self.x_mean @ scaled)
-        m = self.x_mean
-        inv = self.x_inv_std
+        off = b0 - float(self.x_mean @ scaled)
+        out = _sum_partials(self.xy, _csr_batch(self.p), _grad_kernel, self.p, scaled, off,
+                            self.x_mean, self.x_inv_std, family)
+        return unpack_grad(out, self.p, family)
 
-        def fn(idx, val, rows, indptr, y, w):
-            eta = np.full(len(y), off)
-            np.add.at(eta, rows, val * scaled[idx])
-            r = eta - y
-            rw = r if w is None else r * w
-            xr = np.bincount(idx, weights=val * rw[rows], minlength=p)
-            sum_r = rw.sum()
-            g = (xr - m * sum_r) * inv
-            return np.concatenate([g, [sum_r], [rw @ r], [float(len(y))]])
-
-        out = _sum_partials(self.xy, fn, self.p)
-        n = out[-1]
-        return out[:p] / n, out[p] / n, out[p + 1] / n
+    def gradient_gaussian(self, coef: np.ndarray, intercept: float):
+        return self._grad(coef, intercept, "gaussian")
 
     def cov_vec(self, v: np.ndarray) -> np.ndarray:
         """Standardized Gram-vector product C v in one nnz-cost pass
@@ -325,44 +330,20 @@ class SparseSparkXY:
         m = self.x_mean
         inv = self.x_inv_std
 
-        def fn(idx, val, rows, indptr, y, w):
+        def fn(idx, val, rows, y, w):
             u = np.full(len(y), off)
             np.add.at(u, rows, val * scaled[idx])
             uw = u if w is None else u * w
             xu = np.bincount(idx, weights=val * uw[rows], minlength=p)
             return np.concatenate([(xu - m * uw.sum()) * inv, [float(len(y))]])
 
-        out = _sum_partials(self.xy, fn, self.p)
-        return out[:p] / out[-1]
+        return unpack_cov(_sum_partials(self.xy, _csr_batch(p), fn), p)
 
     def grad_binomial(self, coef: np.ndarray, b0: float):
         """Logistic gradient on the standardized scale: one nnz-cost
         pass -> (X~'(mu-y)/n, mean(mu-y), loglik) — the saga-sparse.h
         counterpart (reference src/saga-sparse.h), batch-vectorized."""
-        self.passes += 1
-        p = self.p
-        scaled = coef * self.x_inv_std
-        off = b0 - float(self.x_mean @ scaled)
-        m = self.x_mean
-        inv = self.x_inv_std
-
-        def fn(idx, val, rows, indptr, y, w):
-            eta = np.full(len(y), off)
-            np.add.at(eta, rows, val * scaled[idx])
-            mu = 1.0 / (1.0 + np.exp(-eta))
-            r = mu - y
-            ll_terms = y * eta - np.logaddexp(0.0, eta)
-            if w is not None:
-                r = r * w
-                ll_terms = ll_terms * w
-            xr = np.bincount(idx, weights=val * r[rows], minlength=p)
-            sum_r = r.sum()
-            ll = ll_terms.sum()
-            return np.concatenate([(xr - m * sum_r) * inv, [sum_r], [ll], [float(len(y))]])
-
-        out = _sum_partials(self.xy, fn, self.p)
-        n = out[-1]
-        return out[:p] / n, out[p] / n, out[p + 1]
+        return self._grad(coef, b0, "binomial")
 
     def grad_multinomial(self, coefs: np.ndarray, b0s: np.ndarray):
         """Softmax gradient for all classes in one nnz-cost pass:
@@ -376,67 +357,30 @@ class SparseSparkXY:
         m = self.x_mean
         inv = self.x_inv_std
 
-        def fn(idx, val, rows, indptr, y, w):
-            nb = len(y)
-            eta = np.tile(offs, (nb, 1))
+        def fn(idx, val, rows, y, w):
+            eta = np.tile(offs, (len(y), 1))
             np.add.at(eta, rows, val[:, None] * scaled[:, idx].T)
-            mx = eta.max(axis=1, keepdims=True)
-            e = np.exp(eta - mx)
-            P = e / e.sum(axis=1, keepdims=True)
-            yi = y.astype(np.int64)
-            R = P.copy()
-            R[np.arange(nb), yi] -= 1.0  # P - onehot
-            ll_terms = np.log(np.maximum(P[np.arange(nb), yi], 1e-300))
+            Y = _onehot(y, k)
+            P, ll_terms = softmax_terms(eta, Y)
+            R = P - Y
             if w is not None:
                 R = R * w[:, None]
                 ll_terms = ll_terms * w
-            XR = np.zeros((p, k))
-            for c in range(k):
-                XR[:, c] = np.bincount(idx, weights=val * R[rows, c], minlength=p)
+            XR = np.stack([np.bincount(idx, weights=val * R[rows, c], minlength=p)
+                           for c in range(k)], axis=1)
             G = (XR - np.outer(m, R.sum(axis=0))) * inv[:, None]
-            ll = float(ll_terms.sum())
-            return np.concatenate([G.T.ravel(), R.sum(axis=0), [ll], [float(nb)]])
+            return np.concatenate([G.T.ravel(), R.sum(axis=0), [ll_terms.sum(), float(len(y))]])
 
-        out = _sum_partials(self.xy, fn, self.p)
-        n = out[-1]
-        G = out[: k * p].reshape(k, p) / n
-        gb = out[k * p : k * p + k] / n
-        ll = out[k * p + k]
-        return G, gb, ll
+        return unpack_grad_multinomial(_sum_partials(self.xy, _csr_batch(p), fn), p, k)
 
     def moments_diag_onehot(self, k: int) -> Moments:
         """Diag moments where y (an int class index) is expanded to its
         one-hot columns — sum_y/sum_xy/sum_yy become k-wide."""
         self.passes += 1
-        p = self.p
-
-        def fn(idx, val, rows, indptr, y, w):
-            nb = len(y)
-            yi = y.astype(np.int64)
-            Y = np.zeros((nb, k))
-            Y[np.arange(nb), yi] = 1.0
-            vw = val if w is None else val * w[rows]
-            Yw = Y if w is None else Y * w[:, None]
-            sum_x = np.bincount(idx, weights=vw, minlength=p)
-            sum_xsq = np.bincount(idx, weights=vw * val, minlength=p)
-            XY = np.zeros((p, k))
-            for c in range(k):
-                XY[:, c] = np.bincount(idx, weights=vw * Y[rows, c], minlength=p)
-            return np.concatenate(
-                [[float(nb)], sum_x, sum_xsq, Yw.sum(axis=0), XY.ravel(), (Yw * Y).sum(axis=0)]
-            )
-
-        out = _sum_partials(self.xy, fn, self.p)
-        i = 0
-        n = int(round(out[0])); i += 1
-        sum_x = out[i : i + p]; i += p
-        sum_xsq = out[i : i + p]; i += p
-        sum_y = out[i : i + k]; i += k
-        sum_xy = out[i : i + p * k].reshape(p, k); i += p * k
-        sum_yy = out[i : i + k]
-        self.n = n
-        # 1-D diagonal (see Moments.xx_diag) — np.diag would be p^2 bytes
-        return Moments(n, sum_x, sum_y, sum_xsq, sum_xy, sum_yy)
+        out = _sum_partials(self.xy, _csr_batch(self.p), _moments_kernel, self.p, k)
+        mom = Moments.unpack(out, self.p, k, diag=True)
+        self.n = mom.n
+        return mom
 
 
 def predict_sparse(

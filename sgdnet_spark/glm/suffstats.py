@@ -8,26 +8,28 @@ k (responses), never on n:
 - ``moments_and_gram``  : one pass -> n, Σx, Σy, ΣxxT, Σxy, Σyy
 - ``weighted_quadratic``: one pass per IRLS step -> Σw, Σw·x, Σw·x xT, Σw·x·z, ...
 
-Each pass is a ``mapInPandas`` over flat double feature columns
-(x0..x{p-1}, y0..y{k-1}): Arrow-batched numpy matmuls per partition
-(map-side combine), one packed partial row per partition, summed on the
-driver. At 100 TB this is a single narrow scan + a ~p² byte combine —
-no shuffle of row data at all.
+Each statistic is ONE kernel ``fn(xs, y, w, o) -> packed 1-d partial``
+over a block of rows (standardized features, raw ones for the moments)
+plus one unpack of the summed partials. Partials are additive, so the
+same kernel runs under two reducers: ``_sum_partials`` here (a
+``mapInPandas`` over flat double columns x0..x{p-1}, y0..y{k-1}, one
+packed partial row per partition, summed on the driver — at 100 TB a
+single narrow scan + a ~p² byte combine, no shuffle of row data) and
+``providers.LocalXY`` (row blocks of its cached standardized X). The
+family formulas (``logistic_terms``, ``poisson_terms``,
+``softmax_terms``) are written once, here, for both and for the sparse
+provider.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, fields
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-FEATURES_COL = "__features"  # legacy name, kept for callers
-LABEL_COL = "__label"
-
 
 def xcols(p: int) -> list[str]:
     return [f"x{i}" for i in range(p)]
@@ -83,12 +85,6 @@ def assemble(
     return df.select(*cols)
 
 
-def _batch_xy(pdf: pd.DataFrame, p: int, k: int) -> tuple[np.ndarray, np.ndarray | None]:
-    x = pdf[xcols(p)].to_numpy(dtype=np.float64, copy=False)
-    y = pdf[ycols(k)].to_numpy(dtype=np.float64, copy=False) if k else None
-    return x, y
-
-
 def _offset_array(pdf: pd.DataFrame) -> np.ndarray | None:
     """The offset column(s) assemble() materialized, as a numpy array:
     'o' for a single per-row offset, o0..o{k-1} for the n×k multivariate
@@ -105,28 +101,39 @@ def _offset_array(pdf: pd.DataFrame) -> np.ndarray | None:
     return None
 
 
-def _batch_wo(pdf: pd.DataFrame) -> tuple[np.ndarray | None, np.ndarray | None]:
-    w = pdf["w"].to_numpy(dtype=np.float64, copy=False) if "w" in pdf.columns else None
-    return w, _offset_array(pdf)
+def _dense_batch(p: int, k: int, x_mean=None, x_inv_std=None, cols=None):
+    """Arrow batch decoder -> (x, y, w, o) for the kernels: x is the
+    standardized block when x_mean/x_inv_std are given (raw otherwise),
+    sliced to the screened ``cols`` BEFORE standardizing; y is (n, k);
+    w and o are None when their columns are absent."""
+    names = xcols(p) if cols is None else [f"x{c}" for c in cols]
+    if cols is not None and x_mean is not None:
+        x_mean, x_inv_std = x_mean[cols], x_inv_std[cols]
+
+    def decode(pdf: pd.DataFrame):
+        x = pdf[names].to_numpy(dtype=np.float64, copy=False)
+        if x_mean is not None:
+            x = (x - x_mean) * x_inv_std
+        y = pdf[ycols(k)].to_numpy(dtype=np.float64, copy=False)
+        w = pdf["w"].to_numpy(dtype=np.float64, copy=False) if "w" in pdf.columns else None
+        return x, y, w, _offset_array(pdf)
+
+    return decode
 
 
-def _sum_partials(df: DataFrame, fn, p: int, k: int) -> np.ndarray:
-    """Run ``fn(x, y, w, o) -> 1-d partial vector`` per Arrow batch and
-    sum (w/o are None when the columns are absent — every kernel takes
-    all four).
-
-    One packed partial row per partition; the combine on the driver sums
-    #partitions vectors of O(p^2) floats — independent of n.
-    """
+def _sum_partials(df: DataFrame, decode, fn, *args) -> np.ndarray:
+    """Run ``fn(*decode(batch), *args) -> 1-d partial`` per Arrow batch
+    and sum. One packed partial row per partition; the combine on the
+    driver sums #partitions vectors whose size is independent of n.
+    ``decode`` turns a pandas batch into the kernel's row arguments
+    (dense columns here, CSR arrays in glm.sparse)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         acc = None
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x, y = _batch_xy(pdf, p, k)
-            w, o = _batch_wo(pdf)
-            part = fn(x, y, w, o)
+            part = fn(*decode(pdf), *args)
             acc = part if acc is None else acc + part
         if acc is not None:
             yield pd.DataFrame({"partial": [acc.tolist()]})
@@ -139,14 +146,35 @@ def _sum_partials(df: DataFrame, fn, p: int, k: int) -> np.ndarray:
 
 @dataclass
 class Moments:
-    """First/second raw moments of (X, Y) — everything a gaussian path needs."""
+    """First/second raw moments of (X, Y) — everything a gaussian path
+    needs. Additive across disjoint row sets (``+``/``-`` act field-wise),
+    for the full and the diagonal-only form alike."""
 
     n: int
     sum_x: np.ndarray  # (p,)
     sum_y: np.ndarray  # (k,)
-    sum_xx: np.ndarray  # (p, p)
+    sum_xx: np.ndarray  # (p, p), or its 1-D diagonal (p,) on the wide-p path
     sum_xy: np.ndarray  # (p, k)
     sum_yy: np.ndarray  # (k,)
+
+    def __add__(self, other: "Moments") -> "Moments":
+        return Moments(*(getattr(self, f.name) + getattr(other, f.name) for f in fields(self)))
+
+    def __sub__(self, other: "Moments") -> "Moments":
+        return Moments(*(getattr(self, f.name) - getattr(other, f.name) for f in fields(self)))
+
+    def pack(self) -> np.ndarray:
+        """The packed partial layout: n, Σx, Σy, Σxx, Σxy, Σyy."""
+        return np.concatenate([[float(self.n)], self.sum_x, self.sum_y,
+                               np.ravel(self.sum_xx), np.ravel(self.sum_xy), self.sum_yy])
+
+    @staticmethod
+    def unpack(v: np.ndarray, p: int, k: int, diag: bool = False) -> "Moments":
+        """Inverse of pack(); ``diag``: Σxx is the 1-D diagonal."""
+        sum_x, sum_y, sum_xx, sum_xy, sum_yy = np.split(
+            v[1:], np.cumsum([p, k, p if diag else p * p, p * k]))
+        return Moments(int(round(v[0])), sum_x, sum_y,
+                       sum_xx if diag else sum_xx.reshape(p, p), sum_xy.reshape(p, k), sum_yy)
 
     @property
     def x_mean(self) -> np.ndarray:
@@ -170,6 +198,163 @@ class Moments:
     def y_std(self) -> np.ndarray:
         var = self.sum_yy / self.n - self.y_mean**2
         return np.sqrt(np.maximum(var, 0.0))
+
+
+# -- family row terms (reference src/families.h): mean and fit statistic --
+
+
+def logistic_terms(eta: np.ndarray, y: np.ndarray):
+    """mu = sigmoid(eta) and the per-row log-likelihood y·η − log(1+e^η)
+    (logaddexp: a log(max(mu, 1e-300)) shortcut clamps for η < −691)."""
+    return 1.0 / (1.0 + np.exp(-eta)), y * eta - np.logaddexp(0.0, eta)
+
+
+def poisson_terms(eta: np.ndarray, y: np.ndarray):
+    """mu = exp(eta) and the per-row deviance 2 [y log(y/mu) − (y − mu)]."""
+    mu = np.exp(eta)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        ylogy = np.where(y > 0, y * np.log(y / np.maximum(mu, 1e-300)), 0.0)
+    return mu, 2.0 * (ylogy - (y - mu))
+
+
+def softmax_terms(eta: np.ndarray, y: np.ndarray):
+    """Class probabilities of the (n, k) linear predictor and the per-row
+    log-likelihood Σ_c y_c log p_c of the one-hot y."""
+    e = np.exp(eta - eta.max(axis=1, keepdims=True))
+    prob = e / e.sum(axis=1, keepdims=True)
+    return prob, np.sum(y * np.log(np.maximum(prob, 1e-300)), axis=1)
+
+
+_ROW_TERMS = {"binomial": logistic_terms, "poisson": poisson_terms}
+
+
+# -- kernels: (x, y, w, o, *params) -> packed partial of one row block --
+
+
+def moments_kernel(x, y, w, o, diag=False) -> np.ndarray:
+    """Raw (unstandardized) moments; ``diag`` keeps only the Gram's
+    diagonal. Weighted by the mean-1 ``w``; n stays the row count."""
+    xw = x if w is None else x * w[:, None]
+    yw = y if w is None else y * w[:, None]
+    sum_xx = (xw * x).sum(axis=0) if diag else xw.T @ x
+    return Moments(len(x), xw.sum(axis=0), yw.sum(axis=0), sum_xx, xw.T @ y,
+                   (yw * y).sum(axis=0)).pack()
+
+
+def cov_kernel(xs, y, w, o, v) -> np.ndarray:
+    """Standardized Gram-vector product: X̃ᵀ w̃ X̃ v, n."""
+    u = xs @ v
+    if w is not None:
+        u = u * w
+    return np.concatenate([xs.T @ u, [float(len(u))]])
+
+
+def unpack_cov(v: np.ndarray, p: int) -> np.ndarray:
+    return v[:p] / v[-1]
+
+
+def grad_kernel(xs, y, w, o, coef, b0, family) -> np.ndarray:
+    """X̃ᵀr, Σr, Σ fit-stat terms, n with r the (weighted) residual:
+    eta − y for gaussian (stat: r², no offset), mu − y for binomial
+    (stat: loglik) and poisson (stat: deviance)."""
+    yb = y[:, 0]
+    eta = xs @ coef + b0
+    if family == "gaussian":
+        r = eta - yb
+        stat = r * r
+    else:
+        if o is not None:
+            eta = eta + o
+        mu, stat = _ROW_TERMS[family](eta, yb)
+        r = mu - yb
+    if w is not None:
+        r = r * w
+        stat = stat * w
+    return np.concatenate([xs.T @ r, [r.sum(), stat.sum(), float(len(yb))]])
+
+
+def unpack_grad(v: np.ndarray, p: int, family: str):
+    """(X̃ᵀr/n, Σr/n, stat) — rss/n for gaussian, the raw sum otherwise."""
+    n = v[-1]
+    return v[:p] / n, v[p] / n, v[p + 1] / n if family == "gaussian" else v[p + 1]
+
+
+def grad_multinomial_kernel(xs, y, w, o, coefs, b0s) -> np.ndarray:
+    """Softmax gradient X̃ᵀ(P − Y) as (k, p), its column sums, loglik, n;
+    y is one-hot (n, k), ``o`` the optional n×k offset."""
+    eta = xs @ coefs.T + b0s
+    if o is not None:
+        eta = eta + o
+    prob, ll = softmax_terms(eta, y)
+    R = prob - y
+    if w is not None:
+        R = R * w[:, None]
+        ll = ll * w
+    return np.concatenate([(R.T @ xs).ravel(), R.sum(axis=0), [ll.sum(), float(len(R))]])
+
+
+def unpack_grad_multinomial(v: np.ndarray, p: int, k: int):
+    n = v[-1]
+    return v[: k * p].reshape(k, p) / n, v[k * p : k * p + k] / n, v[k * p + k]
+
+
+def _quadratic(xs, w, z) -> np.ndarray:
+    """Σw, Σw·x, Σw·x xᵀ, Σw·x·z, Σw·z — the WLS sums of one IRLS step."""
+    xw = xs * w[:, None]
+    return np.concatenate([[w.sum()], xw.sum(axis=0), (xw.T @ xs).ravel(), xw.T @ z,
+                           [(w * z).sum()]])
+
+
+def _unpack_quadratic(v: np.ndarray, p: int):
+    sum_w, sum_wx, sum_wxx, sum_wxz, sum_wz = np.split(v, np.cumsum([1, p, p * p, p]))
+    return sum_w[0], sum_wx, sum_wxx.reshape(p, p), sum_wxz, sum_wz[0]
+
+
+def irls_kernel(xs, y, sw, o, coef, b0, family) -> np.ndarray:
+    """One IRLS step for binomial or poisson: the WLS sums, then the
+    weighted fit statistic. wirls = mu(1−mu) | mu; the working response
+    z = (eta − o) + (y − mu)/wirls targets eta EXCLUDING the offset, so
+    the WLS solve fits coef/intercept only."""
+    yb = y[:, 0]
+    eta_lin = xs @ coef + b0
+    eta = eta_lin if o is None else eta_lin + o
+    mu, stat = _ROW_TERMS[family](eta, yb)
+    w = np.maximum(mu if family == "poisson" else mu * (1.0 - mu), 1e-10)
+    z = eta_lin + (yb - mu) / w
+    if sw is not None:
+        w = w * sw
+        stat = stat * sw
+    return np.concatenate([_quadratic(xs, w, z), [stat.sum()]])
+
+
+def unpack_irls(v: np.ndarray, p: int):
+    """(sum_w, sum_wx, sum_wxx, sum_wxz, sum_wz, fit_stat)."""
+    return (*_unpack_quadratic(v[:-1], p), v[-1])
+
+
+def irls_multinomial_kernel(xs, y, sw, o, coefs, b0s) -> np.ndarray:
+    """IRLS sums for ALL classes at once (block-diagonal Newton — one
+    data pass serves every class update): loglik, then per class the
+    WLS sums of wirls = p_c(1 − p_c), z = (eta_c − o_c) + (y_c − p_c)/wirls."""
+    eta_lin = xs @ coefs.T + b0s
+    prob, ll = softmax_terms(eta_lin if o is None else eta_lin + o, y)
+    if sw is not None:
+        ll = ll * sw
+    parts = [[ll.sum()]]
+    for c in range(coefs.shape[0]):
+        pc = prob[:, c]
+        w = np.maximum(pc * (1.0 - pc), 1e-10)
+        z = eta_lin[:, c] + (y[:, c] - pc) / w
+        parts.append(_quadratic(xs, w if sw is None else w * sw, z))
+    return np.concatenate(parts)
+
+
+def unpack_irls_multinomial(v: np.ndarray, p: int, k: int):
+    """([per-class (sum_w, sum_wx, sum_wxx, sum_wxz, sum_wz)], loglik)."""
+    return [_unpack_quadratic(b, p) for b in np.split(v[1:], k)], v[0]
+
+
+# -- Spark passes: one mapInPandas job each --
 
 
 def moments_jvm(xy: DataFrame, p: int, k: int) -> Moments:
@@ -207,66 +392,18 @@ def moments_jvm(xy: DataFrame, p: int, k: int) -> Moments:
 def moments_and_gram(xy: DataFrame, p: int, k: int) -> Moments:
     """One distributed pass -> raw moments (n, Σx, Σy, ΣxxT, Σxy, Σyy);
     weighted when a ``w`` column is present (mean-1 weights, n = count)."""
-
-    def fn(x: np.ndarray, y: np.ndarray | None, w, o) -> np.ndarray:
-        if y is None:
-            y = np.zeros((x.shape[0], k))
-        xw = x if w is None else x * w[:, None]
-        yw = y if w is None else y * w[:, None]
-        return np.concatenate(
-            [
-                [float(x.shape[0])],
-                xw.sum(axis=0),
-                yw.sum(axis=0),
-                (xw.T @ x).ravel(),
-                (xw.T @ y).ravel(),
-                (yw * y).sum(axis=0),
-            ]
-        )
-
-    out = _sum_partials(xy, fn, p, k)
-    i = 0
-    n = int(round(out[0])); i += 1
-    sum_x = out[i : i + p]; i += p
-    sum_y = out[i : i + k]; i += k
-    sum_xx = out[i : i + p * p].reshape(p, p); i += p * p
-    sum_xy = out[i : i + p * k].reshape(p, k); i += p * k
-    sum_yy = out[i : i + k]
-    return Moments(n, sum_x, sum_y, sum_xx, sum_xy, sum_yy)
+    return Moments.unpack(_sum_partials(xy, _dense_batch(p, k), moments_kernel), p, k)
 
 
 def moments_diag(xy: DataFrame, p: int, k: int) -> Moments:
     """O(p) moments (no p×p Gram): n, Σx, Σx² (diag only), Σy, Σxy, Σy².
 
-    The wide-p path needs means/stds/X'y but must never materialize p².
-    Returned as a Moments whose sum_xx is DIAGONAL-only (off-diagonals
-    zero) — callers on this path use x_std()/x_mean/sum_xy exclusively.
+    The wide-p path needs means/stds/X'y but must never materialize p²:
+    sum_xx is the 1-D diagonal (see Moments.xx_diag) — callers on this
+    path use x_std()/x_mean/sum_xy exclusively.
     """
-
-    def fn(x: np.ndarray, y: np.ndarray | None, w, o) -> np.ndarray:
-        xw = x if w is None else x * w[:, None]
-        yw = y if w is None else y * w[:, None]
-        return np.concatenate(
-            [
-                [float(x.shape[0])],
-                xw.sum(axis=0),
-                (xw * x).sum(axis=0),
-                yw.sum(axis=0),
-                (xw.T @ y).ravel(),
-                (yw * y).sum(axis=0),
-            ]
-        )
-
-    out = _sum_partials(xy, fn, p, k)
-    i = 0
-    n = int(round(out[0])); i += 1
-    sum_x = out[i : i + p]; i += p
-    sum_xsq = out[i : i + p]; i += p
-    sum_y = out[i : i + k]; i += k
-    sum_xy = out[i : i + p * k].reshape(p, k); i += p * k
-    sum_yy = out[i : i + k]
-    # 1-D diagonal, NOT np.diag(...): the dense matrix is p² bytes
-    return Moments(n, sum_x, sum_y, sum_xsq, sum_xy, sum_yy)
+    out = _sum_partials(xy, _dense_batch(p, k), moments_kernel, True)
+    return Moments.unpack(out, p, k, diag=True)
 
 
 def gradient_gaussian(
@@ -280,21 +417,11 @@ def gradient_gaussian(
     """One pass -> (X~'r/n, sum_r/n, rss/n) with r = X~ coef + b0 - y.
 
     The wide-p gaussian path (FISTA) uses this instead of the p² Gram:
-    memory O(p), passes O(iterations). Standardization folds in
-    algebraically as in the IRLS passes.
+    memory O(p), passes O(iterations).
     """
-    scaled = coef * x_inv_std
-    off = intercept - float(x_mean @ scaled)
-
-    def fn(x: np.ndarray, y: np.ndarray | None, w, o) -> np.ndarray:
-        r = x @ scaled + off - y[:, 0]
-        rw = r if w is None else r * w
-        xs = (x - x_mean) * x_inv_std
-        return np.concatenate([xs.T @ rw, [rw.sum()], [rw @ r], [float(len(r))]])
-
-    out = _sum_partials(xy, fn, p, 1)
-    n = out[-1]
-    return out[:p] / n, out[p] / n, out[p + 1] / n
+    batch = _dense_batch(p, 1, x_mean, x_inv_std)
+    return unpack_grad(_sum_partials(xy, batch, grad_kernel, coef, intercept, "gaussian"),
+                       p, "gaussian")
 
 
 def cov_vec(
@@ -306,17 +433,7 @@ def cov_vec(
 ) -> np.ndarray:
     """One pass -> standardized Gram-vector product Cv (power iteration
     for Lipschitz estimates on the wide-p paths — O(p), never p²)."""
-    scaled = v * x_inv_std
-    off = -float(x_mean @ scaled)
-
-    def fn(x: np.ndarray, y: np.ndarray | None, w, o) -> np.ndarray:
-        u = x @ scaled + off
-        if w is not None:
-            u = u * w
-        return np.concatenate([(x.T @ u - x_mean * u.sum()) * x_inv_std, [float(len(u))]])
-
-    out = _sum_partials(xy, fn, p, 0)
-    return out[:p] / out[-1]
+    return unpack_cov(_sum_partials(xy, _dense_batch(p, 0, x_mean, x_inv_std), cov_kernel, v), p)
 
 
 def gradient_binomial(
@@ -329,28 +446,9 @@ def gradient_binomial(
 ) -> tuple[np.ndarray, float, float]:
     """One pass -> (X~'(mu-y)/n, mean(mu-y), loglik): the O(p) logistic
     gradient for the wide-p proximal path (no p² quadratic)."""
-    scaled = coef * x_inv_std
-    off = b0 - float(x_mean @ scaled)
-
-    def fn(x: np.ndarray, y: np.ndarray | None, w, o) -> np.ndarray:
-        yb = y[:, 0]
-        eta = x @ scaled + off
-        if o is not None:
-            eta = eta + o
-        mu = 1.0 / (1.0 + np.exp(-eta))
-        r = mu - yb
-        ll_terms = yb * eta - np.logaddexp(0.0, eta)
-        if w is not None:
-            r = r * w
-            ll_terms = ll_terms * w
-        ll = np.sum(ll_terms)
-        return np.concatenate(
-            [(x.T @ r - x_mean * r.sum()) * x_inv_std, [r.sum()], [ll], [float(len(yb))]]
-        )
-
-    out = _sum_partials(xy, fn, p, 1)
-    n = out[-1]
-    return out[:p] / n, out[p] / n, out[p + 1]
+    batch = _dense_batch(p, 1, x_mean, x_inv_std)
+    return unpack_grad(_sum_partials(xy, batch, grad_kernel, coef, b0, "binomial"),
+                       p, "binomial")
 
 
 def gradient_poisson(
@@ -363,30 +461,9 @@ def gradient_poisson(
 ) -> tuple[np.ndarray, float, float]:
     """One pass -> (X~'w̃(mu-y)/n, mean resid, deviance) for the poisson
     log link — the O(p) gradient used by strong-rule screening."""
-    scaled = coef * x_inv_std
-    off = b0 - float(x_mean @ scaled)
-
-    def fn(x: np.ndarray, y: np.ndarray | None, w, o) -> np.ndarray:
-        yb = y[:, 0]
-        eta = x @ scaled + off
-        if o is not None:
-            eta = eta + o
-        mu = np.exp(eta)
-        r = mu - yb
-        with np.errstate(divide="ignore", invalid="ignore"):
-            ylogy = np.where(yb > 0, yb * np.log(yb / np.maximum(mu, 1e-300)), 0.0)
-        dev_terms = 2.0 * (ylogy - (yb - mu))
-        if w is not None:
-            r = r * w
-            dev_terms = dev_terms * w
-        return np.concatenate(
-            [(x.T @ r - x_mean * r.sum()) * x_inv_std, [r.sum()], [dev_terms.sum()],
-             [float(len(yb))]]
-        )
-
-    out = _sum_partials(xy, fn, p, 1)
-    n = out[-1]
-    return out[:p] / n, out[p] / n, out[p + 1]
+    batch = _dense_batch(p, 1, x_mean, x_inv_std)
+    return unpack_grad(_sum_partials(xy, batch, grad_kernel, coef, b0, "poisson"),
+                       p, "poisson")
 
 
 def gradient_multinomial(
@@ -400,28 +477,9 @@ def gradient_multinomial(
     """One pass -> (X~'(P-Y)/n as (k,p), colmeans(P-Y), loglik); y
     arrives one-hot (n, k)."""
     k = coefs.shape[0]
-    scaled = coefs * x_inv_std[None, :]
-    offs = b0s - scaled @ x_mean
-
-    def fn(x: np.ndarray, y: np.ndarray | None, w, o) -> np.ndarray:
-        eta = x @ scaled.T + offs
-        if o is not None:
-            eta = eta + o  # (n, k) fixed multinomial offset
-        mx = eta.max(axis=1, keepdims=True)
-        e = np.exp(eta - mx)
-        P = e / e.sum(axis=1, keepdims=True)
-        R = P - y
-        ll_terms = np.sum(y * np.log(np.maximum(P, 1e-300)), axis=1)
-        if w is not None:
-            R = R * w[:, None]
-            ll_terms = ll_terms * w
-        G = (x.T @ R - np.outer(x_mean, R.sum(axis=0))) * x_inv_std[:, None]
-        ll = float(ll_terms.sum())
-        return np.concatenate([G.T.ravel(), R.sum(axis=0), [ll], [float(len(eta))]])
-
-    out = _sum_partials(xy, fn, p, k)
-    n = out[-1]
-    return out[: k * p].reshape(k, p) / n, out[k * p : k * p + k] / n, out[k * p + k]
+    batch = _dense_batch(p, k, x_mean, x_inv_std)
+    return unpack_grad_multinomial(
+        _sum_partials(xy, batch, grad_multinomial_kernel, coefs, b0s), p, k)
 
 
 def weighted_quadratic(
@@ -434,136 +492,25 @@ def weighted_quadratic(
     kind: str = "binomial",
     cols=None,
 ) -> tuple[float, np.ndarray, np.ndarray, np.ndarray, float, float]:
-    """One IRLS pass for binomial or poisson: stats of the local
-    quadratic model.
-
-    Given current (coef, intercept) on the *standardized* scale, with
-    IRLS weight ``wirls`` and working response ``z`` defined against the
-    linear predictor EXCLUDING the fixed per-row offset (so the WLS
-    solve targets coef/intercept only):
-
-      binomial: mu = sigmoid(eta), wirls = mu(1-mu), z = eta-o + (y-mu)/wirls
-      poisson:  mu = exp(eta),     wirls = mu,       z = eta-o + (y-mu)/mu
+    """One IRLS pass for binomial or poisson (see ``irls_kernel``) at the
+    current (coef, intercept) on the *standardized* scale:
 
       returns (sum_w, sum_wx, sum_wxx, sum_wxz, sum_wz, fit_stat)
 
     fit_stat is the loglik for binomial and the (positive) deviance
     2 Σ w̃ [y log(y/mu) - (y-mu)] for poisson. Sample weights (mean-1
     ``w`` column) multiply both the IRLS weights and the fit statistic.
-    All shaping is done with raw x batches; standardization folds in
-    algebraically so no second materialized copy of the data is needed.
 
     ``cols`` (strong-rule screening) restricts the quadratic to a
     feature subset: coef is then |cols|-sized, the partial carries
-    O(|S|²) floats instead of O(p²), and each batch slices its x block
-    to the screened columns before any matmul.
+    O(|S|²) floats instead of O(p²), and each batch reads only the
+    screened columns.
     """
-    p_full = p  # batch extraction always reads x0..x{p_full-1}
     if cols is not None:
         cols = np.asarray(cols, dtype=np.intp)
-        x_mean = x_mean[cols]
-        x_inv_std = x_inv_std[cols]
-        p = len(cols)
-    scaled = coef * x_inv_std  # apply to raw x
-    off = intercept - float(x_mean @ scaled)
-
-    def fn(x: np.ndarray, y: np.ndarray | None, sw, o) -> np.ndarray:
-        if cols is not None:
-            x = x[:, cols]
-        yb = y[:, 0]
-        eta_lin = x @ scaled + off
-        eta = eta_lin if o is None else eta_lin + o
-        if kind == "poisson":
-            mu = np.exp(eta)
-            w = np.maximum(mu, 1e-10)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                ylogy = np.where(yb > 0, yb * np.log(yb / np.maximum(mu, 1e-300)), 0.0)
-            stat_terms = 2.0 * (ylogy - (yb - mu))
-        else:
-            mu = 1.0 / (1.0 + np.exp(-eta))
-            w = np.maximum(mu * (1.0 - mu), 1e-10)
-            stat_terms = yb * eta - np.logaddexp(0.0, eta)
-        z = eta_lin + (yb - mu) / w
-        if sw is not None:
-            w = w * sw
-            stat_terms = stat_terms * sw
-        xs = (x - x_mean) * x_inv_std
-        xw = xs * w[:, None]
-        return np.concatenate(
-            [
-                [w.sum()],
-                xw.sum(axis=0),
-                (xw.T @ xs).ravel(),
-                xw.T @ z,
-                [(w * z).sum()],
-                [stat_terms.sum()],
-            ]
-        )
-
-    out = _sum_partials(xy, fn, p_full, 1)
-    i = 0
-    sum_w = out[0]; i += 1
-    sum_wx = out[i : i + p]; i += p
-    sum_wxx = out[i : i + p * p].reshape(p, p); i += p * p
-    sum_wxz = out[i : i + p]; i += p
-    sum_wz = out[i]; i += 1
-    loglik = out[i]
-    return sum_w, sum_wx, sum_wxx, sum_wxz, sum_wz, loglik
-
-
-def multinomial_class_stats(x, y, coefs, intercepts, x_mean, x_inv_std, sw=None, o=None):
-    """Per-batch numpy kernel: IRLS quadratic stats for ALL classes at the
-    current coefficients (block-diagonal Newton — one data pass serves
-    every class update). Returns a packed 1-d partial. ``sw`` (mean-1
-    sample weights) multiplies the IRLS weights and the loglik terms.
-    ``o`` is the optional n×k fixed offset: it enters every eta, and the
-    working response targets eta MINUS the offset so the WLS solve fits
-    coef/intercept only (same convention as weighted_quadratic)."""
-    scaled = coefs * x_inv_std[None, :]
-    offs = intercepts - scaled @ x_mean
-    eta = x @ scaled.T + offs  # (n, k)
-    if o is not None:
-        eta = eta + o
-    m = eta.max(axis=1, keepdims=True)
-    e = np.exp(eta - m)
-    prob = e / e.sum(axis=1, keepdims=True)
-    xs = (x - x_mean) * x_inv_std
-    k = coefs.shape[0]
-    ll_terms = np.sum(y * np.log(np.maximum(prob, 1e-300)), axis=1)
-    if sw is not None:
-        ll_terms = ll_terms * sw
-    parts = [np.array([ll_terms.sum()])]
-    for cls in range(k):
-        yk = y[:, cls]
-        pk = prob[:, cls]
-        w = np.maximum(pk * (1.0 - pk), 1e-10)
-        z = (eta[:, cls] if o is None else eta[:, cls] - o[:, cls]) + (yk - pk) / w
-        if sw is not None:
-            w = w * sw
-        xw = xs * w[:, None]
-        parts.append(
-            np.concatenate(
-                [[w.sum()], xw.sum(axis=0), (xw.T @ xs).ravel(), xw.T @ z, [(w * z).sum()]]
-            )
-        )
-    return np.concatenate(parts)
-
-
-def _unpack_class_stats(out: np.ndarray, p: int, k: int):
-    ll = out[0]
-    stats = []
-    stride = 1 + p + p * p + p + 1
-    i = 1
-    for _ in range(k):
-        j = i
-        sum_w = out[j]; j += 1
-        sum_wx = out[j : j + p]; j += p
-        sum_wxx = out[j : j + p * p].reshape(p, p); j += p * p
-        sum_wxz = out[j : j + p]; j += p
-        sum_wz = out[j]
-        stats.append((sum_w, sum_wx, sum_wxx, sum_wxz, sum_wz))
-        i += stride
-    return stats, ll
+    batch = _dense_batch(p, 1, x_mean, x_inv_std, cols)
+    return unpack_irls(_sum_partials(xy, batch, irls_kernel, coef, intercept, kind),
+                       len(coef))
 
 
 def weighted_quadratic_multinomial_all(
@@ -576,12 +523,9 @@ def weighted_quadratic_multinomial_all(
 ):
     """ONE distributed pass -> IRLS stats for every class + loglik."""
     k = coefs.shape[0]
-
-    def fn(x: np.ndarray, y: np.ndarray | None, w, o) -> np.ndarray:
-        return multinomial_class_stats(x, y, coefs, intercepts, x_mean, x_inv_std, sw=w, o=o)
-
-    out = _sum_partials(xy, fn, p, k)
-    return _unpack_class_stats(out, p, k)
+    batch = _dense_batch(p, k, x_mean, x_inv_std)
+    return unpack_irls_multinomial(
+        _sum_partials(xy, batch, irls_multinomial_kernel, coefs, intercepts), p, k)
 
 
 def collect_xy(

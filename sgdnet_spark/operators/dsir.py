@@ -80,15 +80,26 @@ def _segmented_left_fold(acc: np.ndarray, vals: np.ndarray,
     """acc[d] += vals of segment d, added STRICTLY LEFT-TO-RIGHT within
     each segment — the IEEE-exact twin of Spark's aggregate() fold
     (float addition is order-sensitive; np.sum's pairwise summation
-    would drift). One vectorized masked add per in-segment position:
-    total work is len(vals), python overhead is max segment length."""
+    would drift). Segments are visited longest first, so in-segment
+    position p is one vectorized add over the still-active prefix; once
+    a single segment remains, one np.add.accumulate (a sequential left
+    fold) finishes its tail. Total work is O(len(vals) + segments);
+    python overhead is the SECOND-longest segment length, so one
+    outlier document costs no more than its own tokens."""
     if len(vals) == 0:
         return
     starts = np.zeros(len(lengths), dtype=np.int64)
     np.cumsum(lengths[:-1], out=starts[1:])
-    for p in range(int(lengths.max())):
-        m = lengths > p
-        acc[m] += vals[starts[m] + p]
+    order = np.argsort(-lengths, kind="stable")
+    lens, starts = lengths[order], starts[order]
+    second = int(lens[1]) if len(lens) > 1 else 0
+    # active[p] = #segments longer than p: a prefix of the sorted order
+    active = np.searchsorted(-lens, -np.arange(second), side="left")
+    for p, m in enumerate(active):
+        acc[order[:m]] += vals[starts[:m] + p]
+    d, s, e = order[0], starts[0] + second, starts[0] + lens[0]
+    if e > s:
+        acc[d] = np.add.accumulate(np.concatenate([[acc[d]], vals[s:e]]))[-1]
 
 
 def _features(text_col: str, bigrams: bool):
@@ -197,9 +208,8 @@ def fit_dsir_modes(
     as before. Counts are exact integers, so the lr vectors are
     bit-identical — asserted against the expression-path fit_dsir in
     tests/test_dsir.py::test_fit_modes_equals_independent_fits.
-    Measured at sf1 (tools/gen_scale.py data): 27.1 → see
-    OPTIMIZATION_r14.md (the md5-per-occurrence JVM chain was the
-    engine's largest CPU block)."""
+    The speed of this rewrite was not measured (the md5-per-occurrence
+    JVM chain it replaced was the engine's largest CPU block)."""
     if alpha <= 0:
         raise ValueError(f"alpha must be > 0, got {alpha}")
 

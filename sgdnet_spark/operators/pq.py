@@ -924,38 +924,33 @@ def ivfpq_topk(
             # would recompute — models bit-identical (tests/test_pq.py
             # numpy replay unchanged). localCheckpoint truncates lineage
             # (executor loss during training fails the job — the same
-            # tradeoff the semdedup checkpoint documents); the blocks
-            # are released explicitly once the fits complete below.
+            # tradeoff the semdedup checkpoint documents). unpersist()
+            # does not release localCheckpoint blocks (the RDD stays in
+            # getPersistentRDDs); they go when the checkpointed RDD is
+            # garbage-collected on the driver (Spark's ContextCleaner).
             tr = _rotated_frame(tr, rot, vec_col, id_col).localCheckpoint(
                 eager=True
             )
             t_vec, t_id = "v", "id"
         else:
             t_vec, t_id = vec_col, id_col
-        try:
-            if residual:
-                cents = kmeans_fit(
-                    tr, k=n_lists, iters=kmeans_iters, vec_col=t_vec, id_col=t_id,
-                    normalize=True,
-                )
-                books = pq_fit_residual(
-                    tr, cents, m=m, ksub=ksub, iters=kmeans_iters,
-                    vec_col=t_vec, id_col=t_id,
-                )
-            else:
-                # ONE fused pass per Lloyd iteration trains both quantizers
-                # (bit-identical to the standalone kmeans_fit + pq_fit pair —
-                # asserted in tests/test_pq.py)
-                cents, books = kmeans_pq_fit(
-                    tr, k=n_lists, m=m, ksub=ksub, iters=kmeans_iters,
-                    vec_col=t_vec, id_col=t_id,
-                )
-        finally:
-            if opq:
-                # release the checkpointed train-sample blocks now that
-                # the quantizers are fit (they would otherwise linger
-                # until RDD GC, accumulating across repeated calls)
-                tr.unpersist()
+        if residual:
+            cents = kmeans_fit(
+                tr, k=n_lists, iters=kmeans_iters, vec_col=t_vec, id_col=t_id,
+                normalize=True,
+            )
+            books = pq_fit_residual(
+                tr, cents, m=m, ksub=ksub, iters=kmeans_iters,
+                vec_col=t_vec, id_col=t_id,
+            )
+        else:
+            # ONE fused pass per Lloyd iteration trains both quantizers
+            # (bit-identical to the standalone kmeans_fit + pq_fit pair —
+            # asserted in tests/test_pq.py)
+            cents, books = kmeans_pq_fit(
+                tr, k=n_lists, m=m, ksub=ksub, iters=kmeans_iters,
+                vec_col=t_vec, id_col=t_id,
+            )
     coded = _assign_encode(
         df, cents, books, vec_col, id_col, residual=residual, rot=rot
     )

@@ -10,6 +10,7 @@ integer/string outputs are exact.
 
 from __future__ import annotations
 
+import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -186,10 +187,12 @@ def clear_table_cache(path: str | None = None) -> None:
     if path is None:
         _T_CACHE.clear()
         return
-    norm = path.rstrip("/")
+    # realpath on both sides: a trailing slash, "..", "." or a symlink
+    # spelling of the same directory must still hit
+    norm = os.path.realpath(path)
     for key in [
         k for k in _T_CACHE
-        if f"{k[1].rstrip('/')}/{k[2]}.parquet" == norm or k[1].rstrip("/") == norm
+        if norm in (os.path.realpath(k[1]), os.path.realpath(f"{k[1]}/{k[2]}.parquet"))
     ]:
         del _T_CACHE[key]
 

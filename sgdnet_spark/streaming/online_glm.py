@@ -29,17 +29,6 @@ from sgdnet_spark.glm.providers import SparkXY
 from sgdnet_spark.glm.suffstats import Moments
 
 
-def merge_moments(a: Moments, b: Moments) -> Moments:
-    """Field-wise sum — Moments are additive across disjoint row sets
-    (works for full-Gram and diag-only moments alike; THE one merge,
-    shared by every online accumulator in this module)."""
-    return Moments(
-        n=a.n + b.n, sum_x=a.sum_x + b.sum_x, sum_y=a.sum_y + b.sum_y,
-        sum_xx=a.sum_xx + b.sum_xx, sum_xy=a.sum_xy + b.sum_xy,
-        sum_yy=a.sum_yy + b.sum_yy,
-    )
-
-
 class _OnlineIRLS:
     """Shared machinery of the damped per-batch IRLS estimators: running
     diag moments for standardization, one penalized WLS step per batch
@@ -89,7 +78,7 @@ class _OnlineIRLS:
             self.coef = np.zeros(p)
             self._warm_start(mom)
         else:
-            self.moments = merge_moments(self.moments, mom)
+            self.moments = self.moments + mom
         m = self.moments
         x_mean = m.x_mean
         x_std = np.where(m.x_std() > 0, m.x_std(), 1.0)
@@ -170,7 +159,7 @@ class OnlineGaussianPath:
             mom = SparkXY(xy, p, k).moments()
         except ValueError:  # empty batch
             return
-        self.moments = mom if self.moments is None else merge_moments(self.moments, mom)
+        self.moments = mom if self.moments is None else self.moments + mom
         self.n_batches += 1
 
     def foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
@@ -234,7 +223,7 @@ class OnlineMultinomial:
             mom = prov.moments_diag()  # mean/std only — never the Gram
         except ValueError:  # empty batch
             return
-        self.moments = mom if self.moments is None else merge_moments(self.moments, mom)
+        self.moments = mom if self.moments is None else self.moments + mom
         m = self.moments
         x_mean = m.x_mean
         x_std = np.where(m.x_std() > 0, m.x_std(), 1.0)

@@ -271,3 +271,47 @@ def test_arrow_score_matches_expression_path(spark, sf_dir):
         n_tokens = {r[0]: r[1] for r in got}
         assert 900_000_001 not in n_tokens and len(got) == 46
         assert n_tokens[900_000_007] == 4000 + (3999 if bigrams else 0)
+
+
+def _masked_add_fold(acc, vals, lengths):
+    """Reference left fold: one masked add over every segment per
+    in-segment position."""
+    import numpy as np
+
+    starts = np.zeros(len(lengths), dtype=np.int64)
+    np.cumsum(lengths[:-1], out=starts[1:])
+    for p in range(int(lengths.max()) if len(lengths) else 0):
+        m = lengths > p
+        acc[m] += vals[starts[m] + p]
+
+
+def test_segmented_left_fold_is_bit_exact_and_bounded_under_skew():
+    """numpy only: the longest-first fold adds in the same order as the
+    masked-add reference (bit-equal, zero-length segments included), and
+    one 100k-token outlier among 10,000 short docs stays cheap."""
+    import time
+
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    for trial in range(20):
+        lengths = rng.integers(0, 40, size=rng.integers(1, 60))
+        lengths[rng.random(len(lengths)) < 0.2] = 0
+        if trial % 4 == 0:
+            lengths[rng.integers(len(lengths))] = 500
+        vals = rng.normal(size=int(lengths.sum())) * 10.0 ** rng.integers(-8, 8, int(lengths.sum()))
+        init = rng.normal(size=len(lengths))
+        want, got = init.copy(), init.copy()
+        _masked_add_fold(want, vals, lengths)
+        D._segmented_left_fold(got, vals, lengths)
+        assert np.array_equal(want, got), trial
+
+    lengths = np.full(10_001, 300, dtype=np.int64)
+    lengths[5_000] = 100_000
+    vals = rng.normal(size=int(lengths.sum()))
+    acc = np.zeros(len(lengths))
+    t0 = time.perf_counter()
+    D._segmented_left_fold(acc, vals, lengths)
+    assert time.perf_counter() - t0 < 0.25
+    starts = np.concatenate([[0], np.cumsum(lengths[:-1])])
+    assert acc[5_000] == np.add.accumulate(vals[starts[5_000]:starts[5_000] + 100_000])[-1]

@@ -130,12 +130,17 @@ def test_clear_table_cache_invalidates_rewritten_dir(spark, tmp_path):
     key = (spark.sparkContext.applicationId, sf_dir, "t")
     assert key in Q._T_CACHE
 
-    # targeted invalidation by table-file path and by sf_dir both hit
+    # targeted invalidation by table-file path and by sf_dir both hit,
+    # whatever the spelling of the path
     Q.clear_table_cache(tdir)
     assert key not in Q._T_CACHE
     Q._t(spark, sf_dir, "t")
     Q.clear_table_cache(sf_dir)
     assert key not in Q._T_CACHE
+    for spelling in (tdir + "/", os.path.join(sf_dir, "..", os.path.basename(sf_dir), "t.parquet")):
+        Q._t(spark, sf_dir, "t")
+        Q.clear_table_cache(spelling)
+        assert key not in Q._T_CACHE, spelling
 
     # compact_partitioned rewrites the dir in place and must clear the
     # handle itself: the fresh _t read sees the compacted layout
