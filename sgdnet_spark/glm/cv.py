@@ -261,20 +261,13 @@ def _gamma_mse_fold(fit_j, test, cols, lams, gammas, label_col,
     2g(1-g)·E[d_a·d_b] — so three second moments per lambda evaluate the
     whole gamma grid driver-side instead of one scoring pass per gamma.
     """
-    from sgdnet_spark.glm.score import eta_expr
+    from sgdnet_spark.glm.score import eta_expr, weighted_mean
 
     cf_p = fit_j.coef(lams)
     cf_r = fit_j.coef(lams, gamma=0.0)
     nl = cf_p.shape[-1]
     y = F.col(label_col).cast("double")
-    if weights_col is None:
-        _mean = F.avg
-    else:
-        wcol = F.col(weights_col).cast("double")
-
-        def _mean(t):
-            return F.sum(wcol * t) / F.sum(wcol)
-
+    _mean = weighted_mean(weights_col)
     aggs = []
     for i in range(nl):
         da = eta_expr(cf_p[:, i], cols, offset_col) - y

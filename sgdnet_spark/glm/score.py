@@ -1,18 +1,24 @@
-"""Model scoring along the lambda path — reference R/score.R.
+"""Prediction heads and scoring along the lambda path — reference
+R/predict.sgdnet.R and R/score.R.
 
-Measures per family (reference cv_sgdnet.R "Measures" table):
-  gaussian    : deviance(=mse), mse, mae
-  binomial    : deviance, mse, mae, class, auc
-  multinomial : deviance, mse, mae, class
-  mgaussian   : deviance(=mse), mse, mae
+Every family formula is written once here, as a JVM Column builder over
+the link Columns of one lambda: ``response`` (identity, sigmoid, exp or
+max-shifted softmax), ``class_head`` (``eta > 0`` for one link, the
+first-index argmax for several), and ``clamp_prob``, ``weighted_mean``
+and ``_measure`` — one per-lambda aggregate for each (family, measure)
+pair in ``MEASURES``.
 
-``score`` works on a Spark DataFrame and is distributed for EVERY
-(family, measure) combination: gaussian/binomial/multivariate measures
-evaluate all nl lambdas in ONE aggregation pass over JVM prediction
-expressions (no Python in the loop, no per-lambda scan); path AUC runs
-as one histogram pass (explode to (lambda, prob-bin) keys, map-side
-combined to nl×bins cells — n never reaches the driver).
-``score_np`` remains as the numpy twin used by tests.
+The links come from one of two places, and everything after them is
+shared. Dense rows: ``eta_expr`` over the feature columns
+(``SgdnetFit.predict``, ``score``, ``cv._gamma_mse_fold``). Sparse rows:
+the link columns that ``sparse._sparse_links`` appends in one nnz-cost
+pass (``predict_sparse``, ``score_sparse``). ``prediction_columns``
+turns links into a predict call's named output columns;
+``score_links`` scores them, all lambdas in ONE ``df.agg`` (path AUC:
+one min/max aggregation plus one histogram pass,
+``auc_path_distributed``), so only nl- or histogram-sized results reach
+the driver. ``score_np`` is the independent numpy reference the tests
+compare against.
 """
 
 from __future__ import annotations
@@ -26,13 +32,24 @@ from pyspark.sql import functions as F
 PROB_MIN = 1e-05  # reference score.R:86
 PROB_MAX = 1 - PROB_MIN
 
+# type.measure values per family (reference cv_sgdnet.R "Measures" table);
+# deviance is the mse for gaussian and mgaussian
+MEASURES = {
+    "gaussian": ("deviance", "mse", "mae"),
+    "poisson": ("deviance", "mse", "mae"),
+    "binomial": ("deviance", "mse", "mae", "class", "auc"),
+    "multinomial": ("deviance", "mse", "mae", "class"),
+    "mgaussian": ("deviance", "mse", "mae"),
+}
+
 
 def eta_expr(weights: np.ndarray, cols: Sequence[str], offset_col: str | None = None):
     """Intercept-first weight vector -> JVM linear-predictor Column
     (zero coefficients skipped; optional offset column added). The ONE
-    expression builder shared by score(), the per-class multivariate
-    scorers, the path-AUC pass, and the CV gamma fast path — so
-    offset/zero-coefficient handling cannot drift between them."""
+    dense linear-predictor builder: ``SgdnetFit.predict`` and ``score``
+    (through ``path_etas``) and the CV gamma pass ``cv._gamma_mse_fold``
+    all build their links here, so offset and zero-coefficient handling
+    cannot drift between them."""
     from sgdnet_spark.glm.sgdnet import colref
 
     e = F.lit(float(weights[0]))
@@ -42,6 +59,103 @@ def eta_expr(weights: np.ndarray, cols: Sequence[str], offset_col: str | None = 
     if offset_col is not None:
         e = e + colref(offset_col).cast("double")
     return e
+
+
+def path_etas(cf: np.ndarray, cols: Sequence[str], offset=None) -> list[list[F.Column]]:
+    """Per lambda, the k link Columns of a coefficient array: (p+1, nl)
+    for univariate families (k = 1), (k, p+1, nl) for multinomial and
+    mgaussian. ``offset`` is one column added to every link, or a
+    sequence of one column per class/response (the n×k offset)."""
+    cf3 = cf[None] if cf.ndim == 2 else cf
+    k = cf3.shape[0]
+    offs = [offset] * k if offset is None or isinstance(offset, str) else list(offset)
+    return [[eta_expr(cf3[c, :, i], cols, offs[c]) for c in range(k)]
+            for i in range(cf3.shape[-1])]
+
+
+def response(family: str, etas: Sequence[F.Column]) -> list[F.Column]:
+    """The k link Columns of one lambda -> its k response Columns:
+    sigmoid (binomial), exp (poisson), max-shifted softmax
+    (multinomial), identity (gaussian, mgaussian)."""
+    if family == "binomial":
+        return [F.lit(1.0) / (F.lit(1.0) + F.exp(-etas[0]))]
+    if family == "poisson":
+        return [F.exp(etas[0])]
+    if family != "multinomial":
+        return list(etas)
+    mx = F.greatest(*etas) if len(etas) > 1 else etas[0]
+    exps = [F.exp(e - mx) for e in etas]
+    tot = exps[0]
+    for e in exps[1:]:
+        tot = tot + e
+    return [e / tot for e in exps]
+
+
+def class_head(etas: Sequence[F.Column], labels: Sequence) -> F.Column:
+    """The link Columns of one lambda -> the predicted label, a literal
+    from ``labels``. One link (binomial): ``labels[1]`` where eta > 0,
+    else ``labels[0]``. Several (multinomial): the argmax, ties to the
+    FIRST class like numpy's argmax — the structs order on (eta, negated
+    index) because a plain (eta, label) order would break ties toward
+    the largest label."""
+    if len(etas) == 1:
+        return F.when(etas[0] > 0, F.lit(labels[1])).otherwise(F.lit(labels[0]))
+    best = F.array_max(F.array(*[
+        F.struct(e.alias("eta"), F.lit(-i).alias("ni"), F.lit(lab).alias("cls"))
+        for i, (e, lab) in enumerate(zip(etas, labels))
+    ]))
+    return best["cls"]
+
+
+def prediction_columns(fit, type: str, etas: list[list[F.Column]], prefix: str) -> dict:
+    """A predict call's output columns, name -> Column, from its links
+    (``etas``: per lambda, the k link Columns). Univariate families give
+    one column per lambda, ``prefix_{i}`` (``prefix`` alone for one
+    lambda). Multinomial and mgaussian take one lambda and give
+    ``prefix_{name}`` per class/response, or one ``prefix`` class
+    column. ``type`` is link, response or class."""
+    k = len(etas[0])
+    labels = [str(c) for c in
+              (fit.classnames or fit.response_names or (range(k) if k > 1 else [0, 1]))]
+    if type == "class":
+        heads = [[class_head(e, labels)] for e in etas]
+    else:
+        heads = [response(fit.family, e) for e in etas] if type == "response" else etas
+    if fit.family in ("multinomial", "mgaussian"):
+        (cols,) = heads
+        if type == "class":
+            return {prefix: cols[0]}
+        return {f"{prefix}_{name}": c for name, c in zip(labels, cols)}
+    nl = len(heads)
+    return {f"{prefix}_{i}" if nl > 1 else prefix: h[0] for i, h in enumerate(heads)}
+
+
+def clamp_prob(p: F.Column, poison_null: bool = False) -> F.Column:
+    """``p`` clamped to [PROB_MIN, PROB_MAX] (reference score.R:86).
+    ``poison_null`` maps a NULL ``p`` to NaN AFTER the clamp:
+    greatest/least skip NULLs, so the clamp alone would silently score
+    it as PROB_MIN, and a NaN fed into least() would come out
+    un-poisoned."""
+    pc = F.least(F.greatest(p, F.lit(PROB_MIN)), F.lit(PROB_MAX))
+    if not poison_null:
+        return pc
+    return F.when(p.isNull(), F.lit(float("nan"))).otherwise(pc)
+
+
+def weighted_mean(weights_col: str | None = None):
+    """Row-mean aggregate builder: ``F.avg``, or with ``weights_col``
+    the weighted mean Σw·t/Σw over the rows whose term t is non-NULL.
+    F.sum skips NULL terms in the numerator, so counting their weights
+    in the denominator would bias every weighted mean low."""
+    if weights_col is None:
+        return F.avg
+    w = F.col(weights_col).cast("double")
+    return lambda t: F.sum(w * t) / F.sum(F.when(t.isNotNull(), w))
+
+
+def check_measure(family: str, type_measure: str) -> None:
+    if type_measure not in MEASURES.get(family, ()):
+        raise ValueError(f"unsupported (family={family}, type.measure={type_measure})")
 
 
 def _auc(y: np.ndarray, prob: np.ndarray) -> float:
@@ -118,16 +232,14 @@ def _binomial_y(label_col: str, cls) -> F.Column:
 
 
 def auc_path_distributed(
-    fit,
     df: DataFrame,
-    cols,
-    label_col: str,
-    s=None,
+    etas: Sequence[F.Column],
+    y: F.Column,
     bins: int = 1 << 13,
-    offset_col: str | None = None,
 ) -> np.ndarray:
     """AUC at EVERY lambda in one data pass (reference score.R
-    type.measure='auc' along the path).
+    type.measure='auc' along the path), from the binomial link Column
+    of each lambda (``etas``) and the 0/1 label Column ``y``.
 
     Each row explodes to nl (lambda, score-bin) keys; the groupBy's
     map-side combine collapses them to ≤ nl×bins cells per task, so the
@@ -139,15 +251,7 @@ def auc_path_distributed(
     residual error is the within-bucket midrank approximation,
     ≤ 1/bins in rank units.
     """
-    s_arr = fit.lambdas if s is None else np.atleast_1d(s)
-    cf = fit.coef(s_arr)
-    nl = cf.shape[-1]
-    cls = fit.classnames
-    y = _binomial_y(label_col, cls)
-
-    def _eta(i: int) -> F.Column:
-        return eta_expr(cf[:, i], cols, offset_col)
-
+    nl = len(etas)
     # AUC is rank-based, so any strictly increasing transform of the
     # score preserves it — bin the min-max-normalized LINK per path
     # point rather than raw probabilities. A heavily regularized point
@@ -155,17 +259,17 @@ def auc_path_distributed(
     # collapse into a handful of fixed-width buckets and the midrank
     # tie handling would bias the estimate. One extra tiny aggregation
     # (2·nl cells) buys full bucket resolution at every path point.
-    rng = df.agg(*[m for i in range(nl) for m in
-                   (F.min(_eta(i)).alias(f"lo{i}"), F.max(_eta(i)).alias(f"hi{i}"))]).first()
+    rng = df.agg(*[m for i, e in enumerate(etas) for m in
+                   (F.min(e).alias(f"lo{i}"), F.max(e).alias(f"hi{i}"))]).first()
     if rng["lo0"] is None:
         # empty frame or all-NULL predictors: AUC is undefined — return
         # NaN like score_np/_auc rather than TypeError on float(None)
         return np.full(nl, np.nan)
     entries = []
-    for i in range(nl):
+    for i, e in enumerate(etas):
         lo, hi = float(rng[f"lo{i}"]), float(rng[f"hi{i}"])
         span = (hi - lo) if hi > lo else 1.0
-        b = F.least(F.floor((_eta(i) - F.lit(lo)) / F.lit(span) * bins), F.lit(bins - 1)).cast("long")
+        b = F.least(F.floor((e - F.lit(lo)) / F.lit(span) * bins), F.lit(bins - 1)).cast("long")
         b = F.greatest(b, F.lit(0))
         entries.append(F.struct(F.lit(i).alias("li"), b.alias("b")))
     hist = (
@@ -265,93 +369,73 @@ def score_np(fit, x: np.ndarray, y: np.ndarray, type_measure: str = "deviance", 
     raise ValueError(f"unsupported (family={fam}, type.measure={type_measure})")
 
 
-def _score_multinomial_distributed(fit, df, cols, label_col, type_measure, s,
-                                   offset_cols=None):
-    """Multinomial deviance/class/mse/mae in ONE aggregation pass:
-    per-lambda per-class eta expressions -> softmax -> measure (all
-    JVM-side; mirrors score_np's multinomial branch). ``offset_cols``
-    is the n×k offset — one column per class, added to its eta."""
-    s_arr = fit.lambdas if s is None else np.atleast_1d(s)
-    cf = fit.coef(s_arr)  # (k, p+1, nl)
-    k, _, nl = cf.shape
-    classes = fit.classnames
-    aggs = []
-    for i in range(nl):
-        etas = [
-            eta_expr(cf[c, :, i], cols,
-                     offset_cols[c] if offset_cols is not None else None)
-            for c in range(k)
-        ]
-        mx = F.greatest(*etas) if k > 1 else etas[0]
-        exps = [F.exp(e - mx) for e in etas]
-        tot = exps[0]
-        for e in exps[1:]:
-            tot = tot + e
-        if type_measure == "deviance":
-            # -2 log p_trueclass, clamped as score.R
-            ptrue = None
-            for c, cls in enumerate(classes):
-                pc = exps[c] / tot
-                ptrue = F.when(F.col(label_col) == F.lit(cls), pc) if ptrue is None else ptrue.when(
-                    F.col(label_col) == F.lit(cls), pc
-                )
-            # a label outside fit.classnames (or NULL) leaves the when
-            # ladder NULL; greatest/least SKIP nulls, so the clamp would
-            # silently turn it into PROB_MIN and charge the row the
-            # maximum deviance. Poison to NaN AFTER the clamp (least()
-            # would un-poison a NaN fed into it) so bad labels are
-            # visible in the result instead of silently scored.
-            pclamp = F.least(F.greatest(ptrue, F.lit(PROB_MIN)), F.lit(PROB_MAX))
-            pclamp = F.when(ptrue.isNull(), F.lit(float("nan"))).otherwise(pclamp)
-            aggs.append(F.avg(F.lit(-2.0) * F.log(pclamp)).alias(f"m{i}"))
-        elif type_measure in ("mse", "mae"):
-            # sum over classes of (p_c - onehot_c)^2 (resp. |.|), row-avg
-            row_sum = None
-            for c, cls in enumerate(classes):
-                oh = F.when(F.col(label_col) == F.lit(cls), 1.0).otherwise(0.0)
-                d = exps[c] / tot - oh
-                term = d * d if type_measure == "mse" else F.abs(d)
-                row_sum = term if row_sum is None else row_sum + term
-            aggs.append(F.avg(row_sum).alias(f"m{i}"))
-        else:  # class: misclassification rate via argmax over (eta, -class_idx)
-            # the tie-break field must be the NEGATED index, compared
-            # BEFORE the class string: struct ordering on (eta, cls)
-            # would break eta ties toward the lexicographically LAST
-            # class, diverging from score_np's argmax-first convention
-            best = F.array(
-                *[F.struct(e.alias("eta"), F.lit(-c).alias("ni"), F.lit(str(cl)).alias("cls"))
-                  for c, (e, cl) in enumerate(zip(etas, classes))]
-            )
-            pred = F.array_max(best)["cls"]
-            aggs.append(F.avg((pred != F.col(label_col).cast("string")).cast("double")).alias(f"m{i}"))
-    row = df.agg(*aggs).first()
-    return np.array([row[f"m{i}"] for i in range(nl)])
+def _measure(fam: str, type_measure: str, etas: list[F.Column], y, mean, classes) -> F.Column:
+    """One lambda's aggregate for (family, measure) from its k link
+    Columns (mirrors score_np). ``y`` is the label: the numeric response
+    Column for univariate families (binomial: 0/1, NaN-poisoned), the
+    raw label column for multinomial, one Column per response for
+    mgaussian."""
+    if type_measure == "class":
+        if fam == "multinomial":
+            pred = class_head(etas, [str(c) for c in classes])
+            return mean((pred != y.cast("string")).cast("double"))
+        miss = (response(fam, etas)[0] > 0.5).cast("double") - y
+        return mean(miss * miss)
+    mu = response(fam, etas)
+    if type_measure == "deviance" and fam == "binomial":
+        pc = clamp_prob(mu[0])
+        return mean(F.lit(-2.0) * (y * F.log(pc) + (F.lit(1.0) - y) * F.log(F.lit(1.0) - pc)))
+    if type_measure == "deviance" and fam == "poisson":
+        ylogy = F.when(y > 0, y * F.log(y / mu[0])).otherwise(F.lit(0.0))
+        return mean(F.lit(2.0) * (ylogy - (y - mu[0])))
+    if type_measure == "deviance" and fam == "multinomial":
+        # -2 log p_trueclass; a label outside the classes (or NULL)
+        # leaves the when ladder NULL, poisoned to NaN by the clamp
+        ptrue = F.when(y == F.lit(classes[0]), mu[0])
+        for c, p in zip(classes[1:], mu[1:]):
+            ptrue = ptrue.when(y == F.lit(c), p)
+        return mean(F.lit(-2.0) * F.log(clamp_prob(ptrue, poison_null=True)))
+    # mse, mae, and the gaussian/mgaussian deviance (= mse): per row, the
+    # sum over the k responses of (response - target)^2 resp. |.|
+    if fam == "multinomial":
+        targets = [F.when(y == F.lit(c), 1.0).otherwise(0.0) for c in classes]
+    else:
+        targets = y if fam == "mgaussian" else [y]
+    row = None
+    for m, t in zip(mu, targets):
+        d = m - t
+        term = F.abs(d) if type_measure == "mae" else d * d
+        row = term if row is None else row + term
+    # binomial: reference score.R:101's two-column form, 2·(p - y)^2
+    return mean(row * F.lit(2.0) if fam == "binomial" else row)
 
 
-def _score_mgaussian_distributed(fit, df, cols, label_cols, type_measure, s,
-                                 offset_cols=None):
-    """mgaussian deviance(=mse)/mse/mae in ONE aggregation pass —
-    per-response eta expressions, per-row sum over responses, avg.
-    ``offset_cols`` is the n×k offset: one column per response, added to
-    its eta (required for offset fits)."""
+def score_links(fit, df: DataFrame, etas: list[list[F.Column]], label_col,
+                type_measure: str, weights_col: str | None = None) -> np.ndarray:
+    """Score the links ``etas`` (per lambda, the k link Columns over
+    ``df``) against ``label_col`` — a sequence of response columns for
+    mgaussian. Every lambda in ONE ``df.agg``; binomial AUC in the
+    path-AUC histogram pass. The measure must be supported
+    (``check_measure``)."""
     from sgdnet_spark.glm.sgdnet import colref
 
-    s_arr = fit.lambdas if s is None else np.atleast_1d(s)
-    cf = fit.coef(s_arr)  # (k, p+1, nl)
-    k, _, nl = cf.shape
-    names = list(label_cols)
-    aggs = []
-    for i in range(nl):
-        row_sum = None
-        for c in range(k):
-            e = eta_expr(cf[c, :, i], cols,
-                         offset_cols[c] if offset_cols is not None else None)
-            d = e - colref(names[c]).cast("double")
-            term = d * d if type_measure in ("deviance", "mse") else F.abs(d)
-            row_sum = term if row_sum is None else row_sum + term
-        aggs.append(F.avg(row_sum).alias(f"m{i}"))
-    row = df.agg(*aggs).first()
-    return np.array([row[f"m{i}"] for i in range(nl)])
+    fam = fit.family
+    if fam == "binomial":
+        y = _binomial_y(label_col, fit.classnames)
+    elif fam == "multinomial":
+        y = F.col(label_col)
+    elif fam == "mgaussian":
+        y = [colref(c).cast("double") for c in label_col]
+    else:
+        y = F.col(label_col).cast("double")
+    if type_measure == "auc":
+        return auc_path_distributed(df, [e[0] for e in etas], y)
+    mean = weighted_mean(weights_col)
+    row = df.agg(*[
+        _measure(fam, type_measure, e, y, mean, fit.classnames).alias(f"m{i}")
+        for i, e in enumerate(etas)
+    ]).first()
+    return np.array([row[f"m{i}"] for i in range(len(etas))])
 
 
 def score(
@@ -364,19 +448,21 @@ def score(
     weights_col: str | None = None,
     offset_col: str | None = None,
 ) -> np.ndarray:
-    """Score on a Spark DataFrame — every supported (family, measure)
-    runs as distributed aggregation; nothing is collected to the driver
-    beyond p- or histogram-sized results (reference score.R measures).
+    """Score on a Spark DataFrame (reference score.R measures): the
+    links of every requested lambda come from ``path_etas`` and go
+    through ``score_links`` — one distributed aggregation, nothing
+    collected to the driver beyond nl- or histogram-sized results.
 
-    ``weights_col`` (round-5 extension, glmnet semantics) turns every
-    mean into the weighted mean Σw·term/Σw — supported for the
-    gaussian/binomial/poisson single-aggregation measures; the
-    multinomial/mgaussian distributed scorers and path AUC reject it.
+    ``weights_col`` (glmnet semantics) turns every mean into the
+    weighted mean Σw·term/Σw — supported for the gaussian/binomial/
+    poisson single-aggregation measures; multinomial, mgaussian and
+    path AUC reject it.
 
     ``offset_col`` mirrors predict()'s ``newoffset``: REQUIRED when the
     fit was trained with offset_col (scoring an offset fit without the
     offset would silently return wrong deviance/mse/mae), added to
-    every linear predictor before the link inversion."""
+    every linear predictor before the link inversion. Multinomial and
+    mgaussian take a sequence of one column per class/response."""
     # a STRING feature_cols names a single array<numeric> column (the
     # same convention as sgdnet()): expand to element references at the
     # fit's width — list(str) would split the name into characters
@@ -385,8 +471,6 @@ def score(
     else:
         cols = list(feature_cols) if feature_cols else fit.feature_names
     fam = fit.family
-    from sgdnet_spark.glm.sgdnet import colref
-
     if getattr(fit, "offset", False) and offset_col is None:
         raise ValueError("need 'offset_col' since offset was used in fit")
     if weights_col is not None and (
@@ -396,92 +480,24 @@ def score(
             f"weighted scoring is not supported for (family={fam}, "
             f"type.measure={type_measure})"
         )
-    if fam == "multinomial":
-        if type_measure not in ("deviance", "class", "mse", "mae"):
-            raise ValueError(f"unsupported (family={fam}, type.measure={type_measure})")
+    check_measure(fam, type_measure)
+    if fam in ("multinomial", "mgaussian"):
+        what, names = (("class", fit.classnames) if fam == "multinomial"
+                       else ("response", fit.response_names))
         if offset_col is not None and (
-            isinstance(offset_col, str)
-            or len(offset_col) != len(fit.classnames or [])
+            isinstance(offset_col, str) or len(offset_col) != len(names or [])
         ):
             raise ValueError(
-                "multinomial offset_col must be a sequence of one column per "
-                f"class {fit.classnames}"
+                f"{fam} offset_col must be a sequence of one column per {what} {names}"
             )
-        return _score_multinomial_distributed(fit, df, cols, label_col, type_measure, s,
-                                              offset_cols=offset_col)
     if fam == "mgaussian":
-        if type_measure not in ("deviance", "mse", "mae"):
-            raise ValueError(f"unsupported (family={fam}, type.measure={type_measure})")
-        if offset_col is not None and (
-            isinstance(offset_col, str)
-            or len(offset_col) != len(fit.response_names or [])
-        ):
-            raise ValueError(
-                "mgaussian offset_col must be a sequence of one column per "
-                f"response {fit.response_names}"
-            )
         if isinstance(label_col, str):
             raise ValueError(
                 "mgaussian label_col must be a sequence of one column per "
                 f"response {fit.response_names} (a bare string would be "
                 "split into characters)"
             )
-        labels = fit.response_names if label_col is None else list(label_col)
-        return _score_mgaussian_distributed(fit, df, cols, labels, type_measure, s,
-                                            offset_cols=offset_col)
-    if fam == "binomial" and type_measure == "auc":
-        return auc_path_distributed(fit, df, cols, label_col, s=s, offset_col=offset_col)
-    if type_measure not in ("deviance", "mse", "mae", "class") or (
-        fam in ("gaussian", "poisson") and type_measure == "class"
-    ):
-        raise ValueError(f"unsupported (family={fam}, type.measure={type_measure})")
-
+        label_col = fit.response_names if label_col is None else list(label_col)
     s_arr = fit.lambdas if s is None else np.atleast_1d(s)
-    cf = fit.coef(s_arr)
-    nl = cf.shape[-1]
-    cls = fit.classnames
-    if fam == "binomial":
-        ycol = _binomial_y(label_col, cls)
-    else:
-        ycol = F.col(label_col).cast("double")
-
-    if weights_col is None:
-        _mean = F.avg
-    else:
-        wcol = F.col(weights_col).cast("double")
-
-        def _mean(t):
-            # denominator counts only rows whose term is non-NULL: F.sum
-            # skips NULL terms in the numerator, so including their
-            # weights below would silently bias every weighted score low
-            return F.sum(wcol * t) / F.sum(F.when(t.isNotNull(), wcol))
-
-    aggs = []
-    for i in range(nl):
-        eta = eta_expr(cf[:, i], cols, offset_col)
-        if fam == "gaussian":
-            d = eta - ycol
-            expr = _mean(d * d) if type_measure in ("deviance", "mse") else _mean(F.abs(d))
-        elif fam == "poisson":
-            mu = F.exp(eta)
-            if type_measure == "deviance":
-                ylogy = F.when(ycol > 0, ycol * F.log(ycol / mu)).otherwise(F.lit(0.0))
-                expr = _mean(F.lit(2.0) * (ylogy - (ycol - mu)))
-            elif type_measure == "mse":
-                expr = _mean((mu - ycol) * (mu - ycol))
-            else:
-                expr = _mean(F.abs(mu - ycol))
-        else:
-            prob = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
-            if type_measure == "deviance":
-                pc = F.least(F.greatest(prob, F.lit(PROB_MIN)), F.lit(PROB_MAX))
-                expr = _mean(F.lit(-2.0) * (ycol * F.log(pc) + (F.lit(1.0) - ycol) * F.log(F.lit(1.0) - pc)))
-            elif type_measure == "mse":
-                expr = _mean((prob - ycol) * (prob - ycol) * F.lit(2.0))
-            elif type_measure == "mae":
-                expr = _mean(F.abs(prob - ycol) * F.lit(2.0))
-            else:  # class
-                expr = _mean(((prob > 0.5).cast("double") - ycol) * ((prob > 0.5).cast("double") - ycol))
-        aggs.append(expr.alias(f"m{i}"))
-    row = df.agg(*aggs).first()
-    return np.array([row[f"m{i}"] for i in range(nl)])
+    etas = path_etas(fit.coef(s_arr), cols, offset_col)
+    return score_links(fit, df, etas, label_col, type_measure, weights_col)

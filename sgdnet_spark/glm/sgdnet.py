@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from sgdnet_spark.glm import path as path_mod
 from sgdnet_spark.glm import suffstats
 from sgdnet_spark.glm.providers import LocalXY, SparkXY
+from sgdnet_spark.glm.score import path_etas, prediction_columns
 
 FAMILIES = ("gaussian", "binomial", "multinomial", "mgaussian", "poisson")
 
@@ -154,8 +155,10 @@ class SgdnetFit:
     ) -> DataFrame:
         """Append prediction columns to ``newx`` (one per lambda requested).
 
-        Built entirely from JVM column expressions (dot product over the
-        named feature columns) — whole-stage-codegen'd, no Python UDF.
+        Built entirely from JVM column expressions — whole-stage-codegen'd,
+        no Python UDF: the links come from ``score.path_etas`` and the
+        heads from ``score.prediction_columns`` (the builders
+        ``predict_sparse`` and ``score`` share), added in one projection.
         Types follow reference predict.sgdnet.R:105-118: link | response
         | class return DataFrames; coefficients | nonzero return the
         driver-side objects the reference returns (a coefficient matrix
@@ -206,77 +209,19 @@ class SgdnetFit:
                 )
         cols = self._check_cols(feature_cols)
         cf = self.coef(s, gamma=gamma) if s is not None else self.coef(gamma=gamma)
-        multi = self.family in ("multinomial", "mgaussian")
-        nl = cf.shape[-1]
-
-        def linpred(weights: np.ndarray, off: str | None = None) -> F.Column:
-            # weights: (p+1,) with intercept first
-            expr = F.lit(float(weights[0]))
-            for w, c in zip(weights[1:], cols):
-                if w != 0.0:
-                    expr = expr + F.lit(float(w)) * colref(c).cast("double")
-            if off is not None:
-                expr = expr + colref(off).cast("double")
-            return expr
-
-        out = newx
-        if not multi:
-            for i in range(nl):
-                e = linpred(cf[:, i], off=newoffset)
-                if type == "response" and self.family == "binomial":
-                    e = F.lit(1.0) / (F.lit(1.0) + F.exp(-e))
-                elif type == "response" and self.family == "poisson":
-                    e = F.exp(e)
-                elif type == "class" and self.family == "binomial":
-                    cls = [str(c) for c in (self.classnames or [0, 1])]
-                    e = F.when(e > 0, F.lit(cls[1])).otherwise(F.lit(cls[0]))
-                out = out.withColumn(f"{prefix}_{i}" if nl > 1 else prefix, e)
-            return out
-        # multivariate: one column per class/response (single s supported per call)
-        if s is not None and np.atleast_1d(np.asarray(s, dtype=float)).size > 1:
-            raise ValueError(
-                "multivariate predict needs a single s per call (got "
-                f"{np.atleast_1d(np.asarray(s, dtype=float)).size})"
-            )
-        if nl != 1 and s is None and self.nlambda != 1:
-            raise ValueError("multivariate predict needs a single s (or a 1-lambda fit)")
-        k = cf.shape[0]
-        names = self.classnames or self.response_names or [str(i) for i in range(k)]
-        # per-class offsets (n×k): one column each; a single shared column
-        # is broadcast to every class (harmless for softmax — it cancels)
-        offs = (
-            list(newoffset) if isinstance(newoffset, (list, tuple))
-            else [newoffset] * k
-        )
-        etas = [
-            linpred(cf[c, :, 0] if cf.ndim == 3 else cf[c], off=offs[c])
-            for c in range(k)
-        ]
-        if type in ("link",) or (type == "response" and self.family == "mgaussian"):
-            for name, e in zip(names, etas):
-                out = out.withColumn(f"{prefix}_{name}", e)
-            return out
-        if type == "response":  # multinomial softmax
-            mx = F.greatest(*etas)
-            exps = [F.exp(e - mx) for e in etas]
-            tot = exps[0]
-            for e in exps[1:]:
-                tot = tot + e
-            for name, e in zip(names, exps):
-                out = out.withColumn(f"{prefix}_{name}", e / tot)
-            return out
-        if type == "class":
-            # tie-break by NEGATED class index (compared before the
-            # string): plain (eta, cls) ordering would break eta ties
-            # toward the lexicographically last class, while the
-            # reference/np path (argmax) picks the FIRST
-            arr = F.array(*[
-                F.struct(e.alias("eta"), F.lit(-i).alias("ni"), F.lit(str(n)).alias("cls"))
-                for i, (e, n) in enumerate(zip(etas, names))
-            ])
-            best = F.array_max(arr)
-            return out.withColumn(prefix, best["cls"])
-        raise ValueError(f"unknown predict type: {type}")
+        if self.family in ("multinomial", "mgaussian"):
+            # one column per class/response, so one s per call
+            if s is not None and np.atleast_1d(np.asarray(s, dtype=float)).size > 1:
+                raise ValueError(
+                    "multivariate predict needs a single s per call (got "
+                    f"{np.atleast_1d(np.asarray(s, dtype=float)).size})"
+                )
+            if s is None and self.nlambda != 1:
+                raise ValueError("multivariate predict needs a single s (or a 1-lambda fit)")
+        # a single offset column is broadcast to every class (harmless
+        # for softmax — it cancels); all columns in one projection
+        etas = path_etas(cf, cols, newoffset)
+        return newx.withColumns(prediction_columns(self, type, etas, prefix))
 
     def predict_np(self, x: np.ndarray, s=None, type: str = "link",
                    offset: np.ndarray | None = None) -> np.ndarray:

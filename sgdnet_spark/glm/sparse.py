@@ -383,64 +383,21 @@ class SparseSparkXY:
         return mom
 
 
-def predict_sparse(
-    fit,
-    df: DataFrame,
-    idx_col: str,
-    val_col: str,
-    s=None,
-    type: str = "link",
-    prefix: str = "pred",
-) -> DataFrame:
-    """predict() for (indices, values) sparse rows — the counterpart of
-    SgdnetFit.predict for wide-p fits, at nnz cost per row (reference
-    predict.sgdnet.R accepts sparse newx the same way).
+def _sparse_links(df: DataFrame, idx_col: str, val_col: str,
+                  cf: np.ndarray) -> tuple[DataFrame, list[list[F.Column]]]:
+    """Append the link columns of a coefficient array to ``df`` in ONE
+    Arrow-batched mapInPandas at nnz cost per row: eta = a0 + Σ over the
+    row's nnz of beta[idx]·val, for every lambda and class of ``cf``
+    ((p+1, nl) or (k, p+1, nl); original data scale). All input columns
+    pass through. Returns the frame and, per lambda, its k link Columns
+    — the input of the shared heads in glm.score."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    Arrow-batched mapInPandas: per batch, eta[i] = a0 + sum over nnz of
-    beta[idx]·val (coefficients on the ORIGINAL data scale, interpolated
-    at off-path s exactly like the dense predict). All input columns are
-    passed through; prediction columns are appended.
-
-    Univariate families emit one column per requested lambda
-    (``prefix_{i}``, or ``prefix`` for a single one); multinomial needs
-    a single s and emits per-class columns (response) or one label
-    column (class).
-    """
-    from pyspark.sql.types import DoubleType, StringType, StructField, StructType
-
-    fam = fit.family
-    # match.arg semantics, as the dense predict: unknown types must not
-    # silently fall through to link, and poisson response must
-    # exponentiate rather than leak the raw linear predictor
-    if type not in ("link", "response", "class"):
-        raise ValueError(f"unknown predict type: {type!r}")
-    if type == "class" and fam not in ("binomial", "multinomial"):
-        raise ValueError(
-            f"type='class' is only defined for classification families, not {fam!r}"
-        )
-    cf = fit.coef(s) if s is not None else fit.coef()
-    multi = fam == "multinomial"
-    if fam == "mgaussian":
-        raise ValueError("predict_sparse supports gaussian, binomial, multinomial (and poisson) fits")
-    if multi and cf.shape[-1] != 1:
-        raise ValueError("multinomial predict_sparse needs a single s per call")
-
-    in_fields = list(df.schema.fields)
-    if not multi:
-        nl = cf.shape[-1]
-        names = [f"{prefix}_{i}" if nl > 1 else prefix for i in range(nl)]
-        if type == "class" and fam == "binomial":
-            out_fields = [StructField(n, StringType()) for n in names]
-        else:
-            out_fields = [StructField(n, DoubleType()) for n in names]
-    else:
-        classes = [str(c) for c in (fit.classnames or [])]
-        if type == "class":
-            out_fields = [StructField(prefix, StringType())]
-        else:
-            out_fields = [StructField(f"{prefix}_{c}", DoubleType()) for c in classes]
-    schema = StructType(in_fields + out_fields)
-    cls_labels = [str(c) for c in (fit.classnames or ["0", "1"])]
+    cf3 = cf[None] if cf.ndim == 2 else cf
+    k, _, nl = cf3.shape
+    names = [[f"__sp_eta_{i}_{c}" for c in range(k)] for i in range(nl)]
+    schema = StructType(list(df.schema.fields)
+                        + [StructField(n, DoubleType()) for row in names for n in row])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -458,39 +415,59 @@ def predict_sparse(
                 if lens.sum() else np.zeros(0)
             )
             rows = np.repeat(np.arange(len(lens)), lens)
-            out = pdf.copy()
-            if not multi:
-                for i in range(cf.shape[-1]):
-                    eta = np.full(len(pdf), float(cf[0, i]))
-                    np.add.at(eta, rows, val * cf[1:, i][idx])
-                    if fam == "binomial" and type == "response":
-                        col = 1.0 / (1.0 + np.exp(-eta))
-                    elif fam == "poisson" and type == "response":
-                        col = np.exp(eta)
-                    elif fam == "binomial" and type == "class":
-                        col = np.where(eta > 0, cls_labels[1], cls_labels[0])
-                    else:
-                        col = eta
-                    out[out_fields[i].name if cf.shape[-1] > 1 else prefix] = col
-            else:
-                k = cf.shape[0]
-                etas = np.tile(cf[:, 0, 0], (len(pdf), 1))  # (n, k) intercepts
+            links = {}
+            for i in range(nl):
                 for c in range(k):
-                    np.add.at(etas[:, c], rows, val * cf[c, 1:, 0][idx])
-                if type == "class":
-                    out[prefix] = np.asarray(cls_labels)[etas.argmax(axis=1)]
-                elif type == "response":
-                    m = etas.max(axis=1, keepdims=True)
-                    e = np.exp(etas - m)
-                    probs = e / e.sum(axis=1, keepdims=True)
-                    for c, name in enumerate(cls_labels):
-                        out[f"{prefix}_{name}"] = probs[:, c]
-                else:  # link
-                    for c, name in enumerate(cls_labels):
-                        out[f"{prefix}_{name}"] = etas[:, c]
-            yield out
+                    eta = np.full(len(pdf), float(cf3[c, 0, i]))
+                    np.add.at(eta, rows, val * cf3[c, 1:, i][idx])
+                    links[names[i][c]] = eta
+            yield pd.concat([pdf, pd.DataFrame(links, index=pdf.index)], axis=1)
 
-    return df.mapInPandas(run, schema=schema)
+    return df.mapInPandas(run, schema=schema), [[F.col(n) for n in row] for row in names]
+
+
+def predict_sparse(
+    fit,
+    df: DataFrame,
+    idx_col: str,
+    val_col: str,
+    s=None,
+    type: str = "link",
+    prefix: str = "pred",
+) -> DataFrame:
+    """predict() for (indices, values) sparse rows — the counterpart of
+    SgdnetFit.predict for wide-p fits, at nnz cost per row (reference
+    predict.sgdnet.R accepts sparse newx the same way).
+
+    ``_sparse_links`` appends the links (coefficients interpolated at
+    off-path s exactly like the dense predict); the heads are the ones
+    the dense predict uses (``score.prediction_columns``), so the
+    response, class and output naming cannot differ between the two.
+    All input columns are passed through; prediction columns are
+    appended. Univariate families emit one column per requested lambda
+    (``prefix_{i}``, or ``prefix`` for a single one); multinomial needs
+    a single s and emits per-class columns (link, response) or one label
+    column (class).
+    """
+    from sgdnet_spark.glm.score import prediction_columns
+
+    fam = fit.family
+    # match.arg semantics, as the dense predict: unknown types must not
+    # silently fall through to link
+    if type not in ("link", "response", "class"):
+        raise ValueError(f"unknown predict type: {type!r}")
+    if type == "class" and fam not in ("binomial", "multinomial"):
+        raise ValueError(
+            f"type='class' is only defined for classification families, not {fam!r}"
+        )
+    cf = fit.coef(s) if s is not None else fit.coef()
+    if fam == "mgaussian":
+        raise ValueError("predict_sparse supports gaussian, binomial, multinomial (and poisson) fits")
+    if fam == "multinomial" and cf.shape[-1] != 1:
+        raise ValueError("multinomial predict_sparse needs a single s per call")
+    links, etas = _sparse_links(df, idx_col, val_col, cf)
+    heads = prediction_columns(fit, type, etas, prefix)
+    return links.withColumns(heads).drop(*links.columns[len(df.columns):])
 
 
 def score_sparse(
@@ -502,104 +479,24 @@ def score_sparse(
     type_measure: str = "deviance",
     s=None,
 ) -> np.ndarray:
-    """score() for sparse rows: ONE predict_sparse pass emits every
-    lambda's prediction column, then a single JVM aggregation computes
-    the measure — same distributed shape as glm.score, nnz prediction
-    cost (reference R/score.R measures)."""
-    from sgdnet_spark.glm.score import PROB_MAX, PROB_MIN, auc_distributed
+    """score() for sparse rows (reference R/score.R measures): ONE
+    ``_sparse_links`` pass appends the links of every lambda, and
+    ``score.score_links`` — the scoring core of the dense score — turns
+    them into the measure in one aggregation (binomial AUC: the path-AUC
+    histogram pass). The pass count does not grow with the number of
+    lambdas, and labels are handled exactly as the dense score handles
+    them (a NULL or out-of-class binomial label NaN-poisons the score)."""
+    from sgdnet_spark.glm.score import check_measure, score_links
 
     fam = fit.family
-    if fam == "binomial" and type_measure == "auc":
-        # one nnz predict pass emits every lambda's prob; histogram AUC
-        # per lambda over the (persisted) prediction frame
-        s_arr = fit.lambdas if s is None else np.atleast_1d(s)
-        nl = len(s_arr)
-        pred = predict_sparse(fit, df, idx_col, val_col, s=s, type="response", prefix="p")
-        cls = fit.classnames
-        yb = F.when(F.col(label_col).cast("string") == F.lit(str(cls[1])), 1.0).otherwise(0.0)
-        pred = pred.withColumn("__yb", yb).persist()
-        try:
-            names = [f"p_{i}" if nl > 1 else "p" for i in range(nl)]
-            return np.array([auc_distributed(pred, n, "__yb") for n in names])
-        finally:
-            pred.unpersist()
-    if fam == "multinomial":
-        # per-lambda: class probabilities then measure, one pass per lambda
-        s_arr = fit.lambdas if s is None else np.atleast_1d(s)
-        out = np.zeros(len(s_arr))
-        classes = [str(c) for c in fit.classnames]
-        for i, si in enumerate(s_arr):
-            typ = "response" if type_measure in ("deviance", "mse", "mae") else "class"
-            pred = predict_sparse(fit, df, idx_col, val_col, s=float(si), type=typ)
-            lbl = F.col(label_col).cast("string")
-            if type_measure == "deviance":
-                ptrue = None
-                for c in classes:
-                    ptrue = (
-                        F.when(lbl == F.lit(c), F.col(f"pred_{c}"))
-                        if ptrue is None
-                        else ptrue.when(lbl == F.lit(c), F.col(f"pred_{c}"))
-                    )
-                # labels outside fit.classnames (or NULL) leave the when
-                # ladder NULL; greatest/least skip NULLs, so the clamp
-                # would silently max-penalize — NaN-poison AFTER the
-                # clamp instead (same policy as the dense score path)
-                pc = F.least(F.greatest(ptrue, F.lit(PROB_MIN)), F.lit(PROB_MAX))
-                pc = F.when(ptrue.isNull(), F.lit(float("nan"))).otherwise(pc)
-                expr = F.avg(F.lit(-2.0) * F.log(pc))
-            elif type_measure in ("mse", "mae"):
-                row = None
-                for c in classes:
-                    oh = F.when(lbl == F.lit(c), 1.0).otherwise(0.0)
-                    d = F.col(f"pred_{c}") - oh
-                    term = d * d if type_measure == "mse" else F.abs(d)
-                    row = term if row is None else row + term
-                expr = F.avg(row)
-            elif type_measure == "class":
-                expr = F.avg((F.col("pred") != lbl).cast("double"))
-            else:
-                raise ValueError(f"unsupported (family={fam}, type.measure={type_measure})")
-            out[i] = pred.agg(expr.alias("m")).first()["m"]
-        return out
-
-    if fam not in ("gaussian", "binomial"):
+    if fam not in ("gaussian", "binomial", "multinomial"):
         raise ValueError("score_sparse supports gaussian, binomial, multinomial fits")
-    pred = predict_sparse(fit, df, idx_col, val_col, s=s, type="link", prefix="p")
+    check_measure(fam, type_measure)
     s_arr = fit.lambdas if s is None else np.atleast_1d(s)
-    nl = len(s_arr)
-    names = [f"p_{i}" if nl > 1 else "p" for i in range(nl)]
-    if fam == "binomial":
-        cls = fit.classnames
-        y = F.when(F.col(label_col).cast("string") == F.lit(str(cls[1])), 1.0).otherwise(0.0)
-    else:
-        y = F.col(label_col).cast("double")
-    aggs = []
-    for i, n in enumerate(names):
-        eta = F.col(n)
-        if fam == "gaussian":
-            d = eta - y
-            if type_measure in ("deviance", "mse"):
-                expr = F.avg(d * d)
-            elif type_measure == "mae":
-                expr = F.avg(F.abs(d))
-            else:
-                raise ValueError(f"unsupported (family={fam}, type.measure={type_measure})")
-        else:
-            prob = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
-            if type_measure == "deviance":
-                pc = F.least(F.greatest(prob, F.lit(PROB_MIN)), F.lit(PROB_MAX))
-                expr = F.avg(F.lit(-2.0) * (y * F.log(pc) + (F.lit(1.0) - y) * F.log(F.lit(1.0) - pc)))
-            elif type_measure == "mse":
-                expr = F.avg((prob - y) * (prob - y) * F.lit(2.0))
-            elif type_measure == "mae":
-                expr = F.avg(F.abs(prob - y) * F.lit(2.0))
-            elif type_measure == "class":
-                expr = F.avg(((prob > 0.5).cast("double") - y) * ((prob > 0.5).cast("double") - y))
-            else:
-                raise ValueError(f"unsupported (family={fam}, type.measure={type_measure})")
-        aggs.append(expr.alias(f"m{i}"))
-    row = pred.agg(*aggs).first()
-    return np.array([row[f"m{i}"] for i in range(nl)])
+    # only the label rides along through the Python pass
+    links, etas = _sparse_links(df.select(idx_col, val_col, label_col), idx_col, val_col,
+                                fit.coef(s_arr))
+    return score_links(fit, links, etas, label_col, type_measure)
 
 
 def cv_sgdnet_sparse(

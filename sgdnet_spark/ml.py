@@ -32,7 +32,6 @@ persist the model object directly.)
 
 from __future__ import annotations
 
-import numpy as np
 import pyspark.sql.functions as F
 from pyspark.ml import Estimator, Model
 from pyspark.ml.functions import array_to_vector, vector_to_array
@@ -49,6 +48,7 @@ from pyspark.ml.util import DefaultParamsReadable, DefaultParamsWritable
 from pyspark.sql import DataFrame
 
 from sgdnet_spark.glm import SgdnetFit, sgdnet
+from sgdnet_spark.glm.score import class_head, response
 
 _FEATURES_ARR = "__sgdnet_features"
 
@@ -288,45 +288,32 @@ class SgdnetClassificationModel(_SgdnetModelBase, HasProbabilityCol, HasRawPredi
         pred_col = self.getPredictionCol()
         prob_col = self.getOrDefault(self.probabilityCol)
         raw_col = self.getOrDefault(self.rawPredictionCol)
+        # rawPrediction carries the LINEAR predictors (its contract):
+        # softmax values are per-row normalized, so using them as raw
+        # scores changes cross-row rankings for a fixed class; the
+        # probability and the class index come from the shared heads
         if fit.family == "binomial":
             out = fit.predict(ds, s=s, type="link", prefix="__eta")
             eta = F.col("__eta")
-            p1 = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
-            out = (
-                out.withColumn(raw_col, array_to_vector(F.array(-eta, eta)))
-                .withColumn(prob_col, array_to_vector(F.array(F.lit(1.0) - p1, p1)))
-                .withColumn(pred_col, (eta > 0).cast("double"))
-                .drop("__eta")
-            )
-            return out.drop(_FEATURES_ARR)
-        # multinomial: per-class link (eta) AND response columns in class
-        # order — rawPrediction must carry the LINEAR predictors (its
-        # contract): softmax values are per-row normalized, so using them
-        # as raw scores changes cross-row rankings for a fixed class
-        # (each row's value depends on the OTHER classes' etas)
-        out = fit.predict(ds, s=s, type="link", prefix="__e")
-        out = fit.predict(out, s=s, type="response", prefix="__p")
+            (p1,) = response("binomial", [eta])
+            out = out.withColumns({
+                raw_col: array_to_vector(F.array(-eta, eta)),
+                prob_col: array_to_vector(F.array(F.lit(1.0) - p1, p1)),
+                pred_col: class_head([eta], [0.0, 1.0]),
+            })
+            return out.drop(_FEATURES_ARR, "__eta")
         # backticks: MLlib double labels produce class names like "0.0",
-        # and an unquoted F.col("__p_0.0") parses the dot as a
-        # struct-field access (UNRESOLVED_COLUMN `__p_0`.`0`)
+        # and an unquoted F.col("__e_0.0") parses the dot as a
+        # struct-field access (UNRESOLVED_COLUMN `__e_0`.`0`)
         classes = fit.classnames or []
-        probs = [F.col(f"`__p_{c}`") for c in classes]
+        out = fit.predict(ds, s=s, type="link", prefix="__e")
         etas = [F.col(f"`__e_{c}`") for c in classes]
-        # argmax with lowest-index tie-break: maximize (prob, -idx)
-        best = F.array_max(F.array(*[
-            F.struct(p.alias("p"), F.lit(-i).alias("ni"))
-            for i, p in enumerate(probs)
-        ]))
-        out = (
-            out.withColumn(prob_col, array_to_vector(F.array(*probs)))
-            .withColumn(raw_col, array_to_vector(F.array(*etas)))
-            .withColumn(pred_col, (-best["ni"]).cast("double"))
-        )
-        return out.drop(
-            _FEATURES_ARR,
-            *[f"__p_{c}" for c in classes],
-            *[f"__e_{c}" for c in classes],
-        )
+        out = out.withColumns({
+            prob_col: array_to_vector(F.array(*response("multinomial", etas))),
+            raw_col: array_to_vector(F.array(*etas)),
+            pred_col: class_head(etas, [float(i) for i in range(len(etas))]),
+        })
+        return out.drop(_FEATURES_ARR, *[f"__e_{c}" for c in classes])
 
 
 __all__ = [

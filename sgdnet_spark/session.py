@@ -63,9 +63,20 @@ def cap_blas_threads(n: int = 1) -> None:
         pass  # non-linux / static BLAS: the env setdefault is all we can do
 
 
+def _host_driver_mem() -> str:
+    """Half of this host's RAM, in whole GB (at least 1g)."""
+    with open("/proc/meminfo") as fh:
+        kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    return f"{max(1, kb // (2 << 20))}g"
+
+
 def get_spark(app_name: str = "sgdnet_spark", shuffle_partitions: int | None = None) -> SparkSession:
+    """The session every entry point uses. ``SPARK_GRAFT_CPUS`` (default:
+    the CPUs this process may run on) sets local[N] and the default
+    shuffle partitions; ``SPARK_GRAFT_DRIVER_MEM`` (default: half the
+    host's RAM) sets the driver heap."""
     cap_blas_threads(1)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     builder = (
@@ -74,7 +85,7 @@ def get_spark(app_name: str = "sgdnet_spark", shuffle_partitions: int | None = N
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # the UI is off by default (its listener bus measurably slows

@@ -281,13 +281,19 @@ def test_binomial_score_poisons_null_and_unseen_labels(spark):
     """A NULL or out-of-class label must NaN-poison the binomial score,
     not silently count as a genuine negative (training raises on such
     rows; scoring must not invent a different convention)."""
+    from sgdnet_spark.glm.sparse import score_sparse
+
     fit = _flat_fit("binomial", classnames=[0, 1])
-    clean = spark.createDataFrame([(0.1, 0.2, 1), (0.3, 0.4, 0)],
-                                  "x0 double, x1 double, y int")
+    # the dense rows also carry their sparse (indices, values) form
+    schema = "x0 double, x1 double, y int, idx array<int>, val array<double>"
+    clean = spark.createDataFrame([(0.1, 0.2, 1, [0, 1], [0.1, 0.2]),
+                                   (0.3, 0.4, 0, [0, 1], [0.3, 0.4])], schema)
     assert np.isfinite(score(fit, clean, ["x0", "x1"], "y", "mse")).all()
     for bad in (None, 5):
-        df = clean.union(spark.createDataFrame([(0.5, 0.5, bad)], clean.schema))
+        df = clean.union(spark.createDataFrame([(0.5, 0.5, bad, [0, 1], [0.5, 0.5])], schema))
         assert np.isnan(score(fit, df, ["x0", "x1"], "y", "mse")).all()
+        for m in ("mse", "auc"):
+            assert np.isnan(score_sparse(fit, df, "idx", "val", "y", m)).all(), (m, bad)
 
 
 def test_weighted_score_skips_null_term_weights(spark, gauss_df):

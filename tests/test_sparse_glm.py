@@ -255,7 +255,7 @@ def test_score_sparse_matches_dense(spark, sf_dir):
 
     mfit = sgdnet(dense, [f"x{i}" for i in range(p)], "lang", family="multinomial",
                   alpha=1.0, lambdas=lams, thresh=1e-7)
-    for m in ("deviance", "class"):
+    for m in ("deviance", "mse", "mae", "class"):
         want = score(mfit, dense, [f"x{i}" for i in range(p)], "lang", m)
         got = score_sparse(mfit, sparse, "indices", "values", "lang", m)
         assert np.allclose(got, want, rtol=1e-8), m
@@ -278,7 +278,41 @@ def test_score_sparse_auc_matches_dense(spark, sf_dir):
                  alpha=1.0, lambdas=lams, thresh=1e-7)
     want = score(fit, dense, [f"x{i}" for i in range(p)], "is_en", "auc")
     got = score_sparse(fit, sparse, "indices", "values", "is_en", "auc")
-    assert np.all(np.abs(got - want) < 1e-3)
+    assert np.all(np.abs(got - want) < 1e-9)
+
+
+def test_score_sparse_multinomial_is_one_pass(spark):
+    """A multinomial score_sparse scores every lambda from one link pass
+    and one aggregation: 3 lambdas run as many Spark jobs as 1, and each
+    lambda's score is the one it gets alone."""
+    from sgdnet_spark.glm.sgdnet import SgdnetFit
+    from sgdnet_spark.glm.sparse import score_sparse
+
+    rng = np.random.default_rng(5)
+    p, k, nl = 4, 3, 3
+    fit = SgdnetFit(
+        family="multinomial", alpha=1.0, lambdas=np.array([0.3, 0.2, 0.1]),
+        a0=rng.normal(size=(k, nl)), beta=rng.normal(size=(k, p, nl)), df=np.zeros(nl),
+        dev_ratio=np.zeros(nl), nulldev=1.0, npasses=0, nobs=30,
+        feature_names=[f"f{i}" for i in range(p)], classnames=["a", "b", "c"],
+    )
+    rows = [([i % p, (i + 1) % p], [float(rng.normal()), 1.0], "abc"[i % 3]) for i in range(30)]
+    df = spark.createDataFrame(rows, "indices array<int>, vals array<double>, y string")
+    sc = spark.sparkContext
+
+    def run(s, group):
+        sc.setJobGroup(group, group)
+        try:
+            out = score_sparse(fit, df, "indices", "vals", "y", "deviance", s=s)
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(prop, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one, jobs_one = run(fit.lambdas[:1], "score_sparse_one_lambda")
+    three, jobs_three = run(fit.lambdas, "score_sparse_three_lambdas")
+    assert jobs_one >= 1 and jobs_three == jobs_one
+    assert np.allclose(three[0], one[0], rtol=1e-12) and np.isfinite(three).all()
 
 
 def test_cv_sgdnet_sparse(spark, sf_dir):
