@@ -1,4 +1,4 @@
-"""Regularization-path drivers, one per family.
+"""Regularization-path drivers: two solver loops behind per-family setup.
 
 Mirrors the reference semantics (src/utils.h:144 RegularizationPath,
 src/families.h LambdaMax): lambda_max is the smallest penalty that zeroes
@@ -6,6 +6,19 @@ every coefficient, the path is ``nlambda`` log-spaced values down to
 ``lambda_max * lambda_min_ratio``, fits warm-start from the previous
 lambda, and coefficients are returned unstandardized (original x scale).
 
+Each public driver is family setup only: standardization, the null
+model, lambda_max and the path. The solving happens in one of two
+loops, as sgdnet runs every family through one SAGA loop:
+
+- the Gram/IRLS loop: coordinate descent on a p×p quadratic — the Gram
+  itself for gaussian/mgaussian, one IRLS quadratic per pass for
+  binomial/poisson (``_irls_path_loop``) and per class for multinomial;
+- the FISTA loop (``_fista_path``): accelerated proximal gradient on a
+  (k, p) coefficient block with one gradient pass per iteration, for
+  the wide-p ``*_path_fista`` drivers. A family supplies its gradient,
+  Lipschitz bound, prox and whether the intercept is a free coordinate.
+
+Every driver records its lambdas through one writer (``_PathOutput``).
 All drivers consume a provider (providers.py) — they never see row data,
 only p-sized aggregates, so the same code runs on numpy or on a cluster.
 """
@@ -65,19 +78,26 @@ def _standardization(mom, standardize: bool, center: bool):
     return x_mean, std
 
 
+def _xty(mom, x_std, center: bool) -> np.ndarray:
+    """Standardized B = X~'Y/n (p, k) from raw moments; no p×p term, so
+    diagonal moments serve too."""
+    n = mom.n
+    if center:
+        bxy = mom.sum_xy / n - np.outer(mom.x_mean, mom.y_mean)
+    else:
+        bxy = mom.sum_xy / n
+    return bxy * (1.0 / x_std)[:, None]
+
+
 def _gram(mom, x_mean, x_std, center: bool):
     """Standardized C = X~'X~/n and B = X~'Y/n from raw moments."""
     n = mom.n
     inv = 1.0 / x_std
     if center:
         cov = mom.sum_xx / n - np.outer(mom.x_mean, mom.x_mean)
-        bxy = mom.sum_xy / n - np.outer(mom.x_mean, mom.y_mean)
     else:
         cov = mom.sum_xx / n
-        bxy = mom.sum_xy / n
-    C = cov * np.outer(inv, inv)
-    B = bxy * inv[:, None]
-    return C, B
+    return cov * np.outer(inv, inv), _xty(mom, x_std, center)
 
 
 def _lambda_path(lambda_max, nlambda, lambda_min_ratio, lambdas):
@@ -88,11 +108,60 @@ def _lambda_path(lambda_max, nlambda, lambda_min_ratio, lambdas):
     return log_space(lambda_max, lambda_max * lambda_min_ratio, nlambda)
 
 
-def _unstandardize(beta_std: np.ndarray, x_mean, x_std, y_off: float, intercept: bool):
-    """beta on original x scale + intercept (reference utils.h:Unstandardize)."""
-    b = beta_std / x_std
-    a0 = (y_off - float(x_mean @ b)) if intercept else 0.0
-    return b, a0
+class _PathOutput:
+    """The output arrays of one path, filled one lambda at a time.
+
+    ``record`` takes STANDARDIZED coefficients as a (k, p) block (a 1-d
+    vector is k = 1) with their k intercepts on the standardized scale
+    (gaussian/mgaussian: the response offsets) and writes the original-
+    scale coefficients and intercepts (reference utils.h:Unstandardize),
+    df, the per-class dfmat and the dev_ratio; multinomial intercepts
+    are recentered to sum to 0 (reference R/sgdnet.R:409). ``y_scale``
+    multiplies class c back to response units (mgaussian
+    standardize_response). ``result`` packs the PathResult; univariate
+    families come back as (p, nl) and (nl,)."""
+
+    def __init__(self, family: str, lam_path, k: int, x_mean, x_std, intercept: bool,
+                 relax: bool = False, y_scale=None):
+        nl = len(lam_path)
+        self.family, self.lam_path = family, lam_path
+        self.x_mean, self.x_std, self.intercept, self.y_scale = x_mean, x_std, intercept, y_scale
+        self.multi = family in ("multinomial", "mgaussian")
+        self.beta = np.zeros((k, len(x_mean), nl))
+        self.a0 = np.zeros((k, nl))
+        self.dev_ratio = np.zeros(nl)
+        self.df = np.zeros(nl, dtype=int)
+        self.dfmat = np.zeros((k, nl), dtype=int)
+        self.relaxed = (np.zeros_like(self.beta), np.zeros_like(self.a0),
+                        np.zeros(nl)) if relax else None
+
+    def record(self, i: int, coefs, b0s, dev_ratio: float, relaxed: bool = False) -> None:
+        coefs, b0s = np.atleast_2d(coefs), np.atleast_1d(b0s)
+        beta, a0, dr = self.relaxed if relaxed else (self.beta, self.a0, self.dev_ratio)
+        dr[i] = dev_ratio
+        for c in range(len(coefs)):
+            b = (coefs[c] if self.y_scale is None else coefs[c] * self.y_scale[c]) / self.x_std
+            beta[c, :, i] = b
+            a0[c, i] = b0s[c] - float(self.x_mean @ b) if self.intercept else 0.0
+        if self.family == "multinomial" and self.intercept:
+            a0[:, i] -= a0[:, i].mean()
+        if not relaxed:
+            self.dfmat[:, i] = np.count_nonzero(coefs, axis=1)
+            self.df[i] = int(np.count_nonzero(np.any(coefs != 0.0, axis=0)))
+
+    def result(self, nulldev: float, provider, loss: list | None = None) -> PathResult:
+        def shaped(a):
+            return a if a is None or self.multi else a[0]
+
+        beta_r, a0_r, dr_r = self.relaxed or (None, None, None)
+        return PathResult(
+            self.family, self.lam_path, shaped(self.a0), shaped(self.beta), self.df,
+            self.dev_ratio, nulldev,
+            # read AFTER the path: the provider increments passes per scan
+            getattr(provider, "passes", 1), self.x_mean, self.x_std,
+            self.dfmat if self.multi else None, loss=loss,
+            a0_relaxed=shaped(a0_r), beta_relaxed=shaped(beta_r), dev_ratio_relaxed=dr_r,
+        )
 
 
 def _penalty_options(
@@ -175,6 +244,16 @@ def _lambda_max_scaled(score: np.ndarray, alpha: float, pf) -> float:
     return float(np.max(score[mask] / pf[mask])) / a
 
 
+def _auto_path(lambdas, alpha: float, pf) -> bool:
+    """Whether the first path point is lambda_max itself, where every
+    coefficient is zero by construction (KKT with equality) and the
+    null model is emitted without a fit: only on an automatic path with
+    every feature penalized — ridge (alpha=0), user lambdas and zero
+    penalty factors fit the first point for real."""
+    pf_zero = pf is not None and bool(np.any(pf == 0))
+    return (lambdas is None or len(lambdas) == 0) and alpha > 0 and not pf_zero
+
+
 def _fista_terms(lam: float, alpha: float, pf):
     """Per-coordinate FISTA penalty terms: (l1_vec, l2_vec, l2_max).
 
@@ -204,6 +283,84 @@ def _penalty_value(beta: np.ndarray, lam: float, alpha: float, pf) -> float:
     return lam * (alpha * l1 + (1.0 - alpha) / 2.0 * l2)
 
 
+def _gaussian_null(mom, intercept: bool):
+    """(y_off, y_var, nulldev) of the intercept-only gaussian model: the
+    variance of y around its mean (around 0 without an intercept)."""
+    n = mom.n
+    y_mean = float(mom.y_mean[0]) if intercept else 0.0
+    if intercept:
+        y_var = float(mom.sum_yy[0] / n - y_mean**2)
+    else:
+        y_var = float(mom.sum_yy[0] / n)
+    return y_mean, y_var, y_var * n
+
+
+def _binomial_null(mom, intercept: bool):
+    """(b0, ll_null) of the intercept-only logistic model without an
+    offset, in closed form: the weighted moments already fold sample
+    weights into pbar, so this holds weighted or not."""
+    n = mom.n
+    pbar = float(mom.y_mean[0])
+    ll_null = n * (pbar * np.log(max(pbar, 1e-300)) + (1 - pbar) * np.log(max(1 - pbar, 1e-300)))
+    b0 = float(np.log(pbar / (1 - pbar))) if intercept else 0.0
+    return b0, ll_null
+
+
+def _binomial_null_offset(irls, intercept: bool):
+    """Intercept-only logistic MLE under a per-row offset, which has no
+    closed form: Newton on the intercept, where each step is one IRLS
+    pass ``irls(b0)`` and the WLS solve of the intercept-only quadratic
+    IS the Newton step. Returns (b0, ll_null, the last pass's quadratic
+    stats (sw, swx, swxx, swxz, swz))."""
+    b0 = 0.0
+    for _ in range(10):
+        *stats, ll = irls(b0)
+        if not intercept:
+            break
+        b0_new = stats[4] / stats[0]
+        if abs(b0_new - b0) <= 1e-10 * max(1.0, abs(b0_new)):
+            b0 = b0_new
+            break
+        b0 = b0_new
+    return b0, ll, tuple(stats)
+
+
+def _multinomial_null(mom, intercept: bool):
+    """(b0s, ll_null) of the intercept-only softmax model without an
+    offset: the log class priors, centered to sum to 0."""
+    pri = mom.y_mean
+    ll_null = float(mom.n * np.sum(pri * np.log(np.maximum(pri, 1e-300))))
+    b0s = np.log(np.maximum(pri, 1e-300)) if intercept else np.zeros(len(pri))
+    b0s = b0s - b0s.mean() if intercept else b0s
+    return b0s, ll_null
+
+
+def _multinomial_null_offset(provider, pri, k: int, p: int, intercept: bool):
+    """Intercept-only softmax MLE under a fixed n×k offset, by the
+    balancing fixed point b0_c <- b0_c + log(ȳ_c / P̄_c) (each iteration
+    is one gradient pass; the score of the intercept-only likelihood is
+    exactly P̄_c - ȳ_c, so the update has the MLE as its only fixed
+    point). Returns (b0s, ll_null, null_gradient (k,p))."""
+    zeros = np.zeros((k, p))
+    if not intercept:
+        g, _, ll = provider.grad_multinomial(zeros, np.zeros(k))
+        return np.zeros(k), ll, g
+    b0s = np.log(np.maximum(pri, 1e-300))
+    b0s = b0s - b0s.mean()
+    g = None
+    ll = 0.0
+    for _ in range(50):
+        g, gb, ll = provider.grad_multinomial(zeros, b0s)
+        pbar = gb + pri  # colmeans(P) = colmeans(P-Y) + colmeans(Y)
+        step = np.log(np.maximum(pri, 1e-300) / np.maximum(pbar, 1e-300))
+        b0s = b0s + step
+        b0s = b0s - b0s.mean()
+        if float(np.max(np.abs(step))) <= 1e-12:
+            break
+    g, _, ll = provider.grad_multinomial(zeros, b0s)
+    return b0s, ll, g
+
+
 def gaussian_path(
     provider,
     alpha: float,
@@ -226,35 +383,21 @@ def gaussian_path(
     x_mean, x_std = _standardization(mom, standardize, intercept)
     C, B = _gram(mom, x_mean, x_std, intercept)
     b = B[:, 0]
-    y_mean = float(mom.y_mean[0]) if intercept else 0.0
-    # variance of y around the null model
-    if intercept:
-        y_var = float(mom.sum_yy[0] / n - y_mean**2)
-    else:
-        y_var = float(mom.sum_yy[0] / n)
-    nulldev = y_var * n
+    y_mean, y_var, nulldev = _gaussian_null(mom, intercept)
     p = len(b)
     pf, lo, hi = _penalty_options(p, x_std, penalty_factor, exclude, lower_limits, upper_limits)
 
     lambda_max = _lambda_max_scaled(np.abs(b), alpha, pf)
     lam_path = _lambda_path(lambda_max, nlambda, lambda_min_ratio, lambdas)
-    nl = len(lam_path)
 
     # the ridge closed form covers every unconstrained case: finite
     # factors scale the diagonal, infinite (excluded) coordinates drop
     # out of the system exactly; only box limits go through CD
     ridge_closed = alpha == 0.0 and lo is None and hi is None
     beta = np.zeros(p)
-    out_beta = np.zeros((p, nl))
-    out_a0 = np.zeros(nl)
-    out_df = np.zeros(nl, dtype=int)
-    out_dr = np.zeros(nl)
-    out_beta_r = np.zeros((p, nl)) if relax else None
-    out_a0_r = np.zeros(nl) if relax else None
-    out_dr_r = np.zeros(nl) if relax else None
+    out = _PathOutput("gaussian", lam_path, 1, x_mean, x_std, intercept, relax=relax)
     relax_cache: dict = {}
     losses: list = []
-    npasses = 0
     for i, lam in enumerate(lam_path):
         if ridge_closed:
             # ridge: (C + lam diag(pf)) beta = b has a closed form — solve
@@ -269,19 +412,13 @@ def gaussian_path(
                 beta[fin] = np.linalg.solve(
                     C[np.ix_(fin, fin)] + lam * np.diag(pf[fin]), b[fin]
                 )
-            its = 1
         else:
-            beta, its = enet_cd_gram(C, b, lam, alpha, beta, tol=thresh, maxit=maxit,
-                                     pf=pf, lo=lo, hi=hi)
-        npasses += its
+            beta, _ = enet_cd_gram(C, b, lam, alpha, beta, tol=thresh, maxit=maxit,
+                                   pf=pf, lo=lo, hi=hi)
         rss_n = y_var - 2.0 * float(b @ beta) + float(beta @ C @ beta)
         pen = _penalty_value(beta, lam, alpha, pf)
         losses.append([0.5 * rss_n + pen])
-        out_dr[i] = 1.0 - rss_n * n / nulldev if nulldev > 0 else 0.0
-        ob, oa0 = _unstandardize(beta, x_mean, x_std, y_mean, intercept)
-        out_beta[:, i] = ob
-        out_a0[i] = oa0
-        out_df[i] = int(np.count_nonzero(beta))
+        out.record(i, beta, y_mean, 1.0 - rss_n * n / nulldev if nulldev > 0 else 0.0)
         if relax:
             # relaxed (debiased) fit, glmnet relax=TRUE: unpenalized OLS on
             # this lambda's active set — closed form from the SAME Gram, no
@@ -308,15 +445,9 @@ def gaussian_path(
                         )[0]
                 relax_cache[A] = rb
             rssr = y_var - 2.0 * float(b @ rb) + float(rb @ C @ rb)
-            out_dr_r[i] = 1.0 - rssr * n / nulldev if nulldev > 0 else 0.0
-            orb, ora0 = _unstandardize(rb, x_mean, x_std, y_mean, intercept)
-            out_beta_r[:, i] = orb
-            out_a0_r[i] = ora0
-    return PathResult(
-        "gaussian", lam_path, out_a0, out_beta, out_df, out_dr, nulldev,
-        getattr(provider, "passes", 1), x_mean, x_std, loss=losses,
-        a0_relaxed=out_a0_r, beta_relaxed=out_beta_r, dev_ratio_relaxed=out_dr_r,
-    )
+            out.record(i, rb, y_mean, 1.0 - rssr * n / nulldev if nulldev > 0 else 0.0,
+                       relaxed=True)
+    return out.result(nulldev, provider, loss=losses)
 
 
 def mgaussian_path(
@@ -353,33 +484,113 @@ def mgaussian_path(
     # group lambda_max: smallest lam with all PENALIZED row-groups zero
     lambda_max = _lambda_max_scaled(np.linalg.norm(Bs, axis=1), alpha, pf)
     lam_path = _lambda_path(lambda_max, nlambda, lambda_min_ratio, lambdas)
-    nl = len(lam_path)
 
     beta = np.zeros((p, k))
-    out_beta = np.zeros((k, p, nl))
-    out_a0 = np.zeros((k, nl))
-    out_df = np.zeros(nl, dtype=int)
-    out_dfmat = np.zeros((k, nl), dtype=int)
-    out_dr = np.zeros(nl)
-    npasses = 0
+    out = _PathOutput("mgaussian", lam_path, k, x_mean, x_std, intercept, y_scale=y_scale)
     yv_scaled = y_var / (y_scale**2)
     for i, lam in enumerate(lam_path):
-        beta, its = group_cd_gram(C, Bs, lam, alpha, beta, tol=thresh, maxit=maxit, pf=pf)
-        npasses += its
+        beta, _ = group_cd_gram(C, Bs, lam, alpha, beta, tol=thresh, maxit=maxit, pf=pf)
         # per-response RSS/n on the scaled problem, unscaled back to y units
         rss_c = yv_scaled - 2.0 * np.einsum("pc,pc->c", Bs, beta) + np.einsum("pc,pq,qc->c", beta, C, beta)
         dev = float(np.sum(rss_c * y_scale**2)) * n
-        out_dr[i] = 1.0 - dev / nulldev if nulldev > 0 else 0.0
-        for c in range(k):
-            ob, oa0 = _unstandardize(beta[:, c] * y_scale[c], x_mean, x_std, float(y_mean[c]), intercept)
-            out_beta[c, :, i] = ob
-            out_a0[c, i] = oa0
-            out_dfmat[c, i] = int(np.count_nonzero(beta[:, c]))
-        out_df[i] = int(np.count_nonzero(np.any(beta != 0.0, axis=1)))
-    return PathResult(
-        "mgaussian", lam_path, out_a0, out_beta, out_df, out_dr, nulldev,
-        getattr(provider, "passes", 1), x_mean, x_std, out_dfmat,
-    )
+        out.record(i, beta.T, y_mean, 1.0 - dev / nulldev if nulldev > 0 else 0.0)
+    return out.result(nulldev, provider)
+
+
+def _power_iter_L(matvec, p: int, iters: int = 6) -> float:
+    """lambda_max of the standardized Gram by power iteration on
+    ``matvec(v) = C v`` (one data pass per step) — never materializes
+    p², with a safety margin over the estimate."""
+    rng = np.random.default_rng(0)
+    v = rng.normal(size=p)
+    v /= np.linalg.norm(v)
+    L = 1.0
+    for _ in range(iters):
+        cv = matvec(v)
+        nrm = float(np.linalg.norm(cv))
+        if nrm == 0:
+            break
+        L = nrm
+        v = cv / nrm
+    return L * 1.05
+
+
+def _fista_path(
+    family: str, provider, grad, L: float, B: np.ndarray, b0s: np.ndarray, nulldev: float,
+    devr_of, x_mean, x_std, *, free_b0: bool, tol: float, alpha: float, nlambda: int,
+    lambda_min_ratio: float, lambdas, intercept: bool, maxit: int, penalty_factor=None,
+    exclude=None, lower_limits=None, upper_limits=None, grouped: bool = False,
+) -> PathResult:
+    """The FISTA path loop behind the three ``*_path_fista`` drivers:
+    accelerated proximal gradient on a (k, p) coefficient block (k = 1
+    for gaussian and binomial), warm-started along the path, one
+    gradient pass per iteration plus one at each solution.
+
+    The family supplies ``grad(Z, zb) -> (G, gb, stat)`` (the smooth
+    gradient at coefficients Z and intercepts zb, and the statistic
+    ``devr_of`` turns into the dev_ratio), the Lipschitz bound ``L``,
+    the null gradient ``B`` (p, k) that sets lambda_max, the null
+    intercepts ``b0s``, and ``free_b0``: whether the intercepts move
+    with the iterates (a fixed intercept — gaussian — stays out of the
+    convergence test). The prox is the elementwise soft-threshold, then
+    the box limits, or with ``grouped`` the row-wise group shrink."""
+    k, p = len(b0s), B.shape[0]
+    pf, lo, hi = _penalty_options(p, x_std, penalty_factor, exclude, lower_limits, upper_limits)
+    if grouped:
+        # all-zero iff every row's null-gradient 2-norm is within the
+        # group threshold, so lambda_max = max_j ||B_j.||_2 / (alpha pf_j)
+        score = np.sqrt((B * B).sum(axis=1))
+
+        def prox(cand, thr):
+            # row-wise group soft-threshold over the k classes of each
+            # feature (groups are the columns of the (k, p) block); an
+            # infinite factor drives the scale to 0 = excluded
+            nrm = np.sqrt((cand * cand).sum(axis=0))
+            return cand * np.maximum(0.0, 1.0 - thr / np.maximum(nrm, 1e-300))
+    else:
+        score = np.max(np.abs(B), axis=1)
+        lo_, hi_ = (-np.inf if lo is None else lo), (np.inf if hi is None else hi)
+
+        def prox(cand, thr):
+            new = soft_threshold(cand, thr)
+            return new if lo is None and hi is None else np.clip(new, lo_, hi_)
+    lam_path = _lambda_path(_lambda_max_scaled(score, alpha, pf), nlambda, lambda_min_ratio,
+                            lambdas)
+
+    out = _PathOutput(family, lam_path, k, x_mean, x_std, intercept)
+    coefs = np.zeros((k, p))
+    first_is_null = _auto_path(lambdas, alpha, pf)
+    for i, lam in enumerate(lam_path):
+        if first_is_null and i == 0:
+            out.record(i, coefs, b0s, 0.0)
+            continue
+        l1v, l2v, l2max = _fista_terms(lam, alpha, pf)
+        step = 1.0 / (L + l2max)
+        z, zb = coefs.copy(), b0s.copy()
+        t = 1.0
+        prev, prevb = coefs.copy(), b0s.copy()
+        for _ in range(maxit):
+            G, gb, _ = grad(z, zb)
+            # per-feature penalty vectors broadcast over the k rows
+            new = prox(z - step * (G + l2v * z), step * l1v)
+            t_new = (1.0 + np.sqrt(1.0 + 4.0 * t * t)) / 2.0
+            z = new + (t - 1.0) / t_new * (new - prev)
+            delta = float(np.max(np.abs(new - prev)))
+            scale = float(np.max(np.abs(new)))
+            newb = zb
+            if free_b0:
+                newb = zb - step * gb
+                zb = newb + (t - 1.0) / t_new * (newb - prevb)
+                delta = max(delta, float(np.max(np.abs(newb - prevb))))
+                scale = max(scale, float(np.max(np.abs(newb))))
+            prev, prevb = new, newb
+            t = t_new
+            if delta <= tol * max(scale, 1e-12):
+                break
+        coefs, b0s = prev, prevb
+        _, _, stat = grad(coefs, b0s)
+        out.record(i, coefs, b0s, devr_of(stat) if nulldev > 0 else 0.0)
+    return out.result(nulldev, provider)
 
 
 def gaussian_path_fista(
@@ -401,109 +612,32 @@ def gaussian_path_fista(
     """Wide-p gaussian path: accelerated proximal gradient (FISTA) with
     one distributed gradient pass per iteration — O(p) memory, never a
     p×p Gram. Lipschitz constant from distributed power iteration
-    (Cv = grad(v) + b, one pass per step).
+    (Cv = grad(v) + b, one pass per step); the intercept stays fixed at
+    the response mean.
 
     The n-scalable complement to gaussian_path: use when p² no longer
-    fits the driver (SURVEY §7 known-gaps closure).
+    fits the driver.
     """
     mom = mom or provider.moments()
     n = mom.n
     x_mean, x_std = _standardization(mom, standardize, intercept)
     provider.set_standardization(x_mean, 1.0 / x_std)
-    y_mean = float(mom.y_mean[0]) if intercept else 0.0
-    y_var = float(mom.sum_yy[0] / n - y_mean**2) if intercept else float(mom.sum_yy[0] / n)
-    nulldev = y_var * n
-    inv = 1.0 / x_std
-    if intercept:
-        b = (mom.sum_xy[:, 0] / n - mom.x_mean * y_mean) * inv
-    else:
-        b = (mom.sum_xy[:, 0] / n) * inv
-    p = len(b)
+    y_mean, _, nulldev = _gaussian_null(mom, intercept)
+    B = _xty(mom, x_std, intercept)
 
-    def grad_at(v: np.ndarray) -> tuple[np.ndarray, float]:
-        g, _, rssn = provider.gradient_gaussian(v, y_mean)
-        return g, rssn
+    def grad(Z, _zb):
+        g, _, rssn = provider.gradient_gaussian(Z[0], y_mean)
+        return g, 0.0, rssn
 
-    # power iteration for L = lambda_max(C): Cv = grad(v) + b
-    rng = np.random.default_rng(0)
-    v = rng.normal(size=p)
-    v /= np.linalg.norm(v)
-    L = 1.0
-    for _ in range(6):
-        cv = grad_at(v)[0] + b
-        nrm = float(np.linalg.norm(cv))
-        if nrm == 0:
-            break
-        L = nrm
-        v = cv / nrm
-    L *= 1.05  # safety margin over the power-iteration estimate
-    pf, lo, hi = _penalty_options(p, x_std, penalty_factor, exclude, lower_limits, upper_limits)
-    boxed = lo is not None or hi is not None
-
-    lambda_max = _lambda_max_scaled(np.abs(b), alpha, pf)
-    lam_path = _lambda_path(lambda_max, nlambda, lambda_min_ratio, lambdas)
-    nl = len(lam_path)
-
-    beta = np.zeros(p)
-    out_beta = np.zeros((p, nl))
-    out_a0 = np.zeros(nl)
-    out_df = np.zeros(nl, dtype=int)
-    out_dr = np.zeros(nl)
-    pf_zero = pf is not None and bool(np.any(pf == 0))
-    auto_path = (lambdas is None or len(lambdas) == 0) and alpha > 0 and not pf_zero
-    rssn_last = y_var
-    for i, lam in enumerate(lam_path):
-        if auto_path and i == 0:
-            out_a0[i] = y_mean
-            continue
-        l1v, l2v, l2max = _fista_terms(lam, alpha, pf)
-        step = 1.0 / (L + l2max)
-        z = beta.copy()
-        t = 1.0
-        prev = beta.copy()
-        for _ in range(maxit):
-            g, rssn_last = grad_at(z)
-            cand = z - step * (g + l2v * z)
-            new = soft_threshold(cand, step * l1v)
-            if boxed:
-                new = np.clip(new, lo if lo is not None else -np.inf,
-                              hi if hi is not None else np.inf)
-            t_new = (1.0 + np.sqrt(1.0 + 4.0 * t * t)) / 2.0
-            z = new + (t - 1.0) / t_new * (new - prev)
-            delta = float(np.max(np.abs(new - prev)))
-            scale = max(float(np.max(np.abs(new))), 1e-12)
-            prev = new
-            t = t_new
-            if delta <= thresh * scale:
-                break
-        beta = prev
-        g, rssn_last = grad_at(beta)
-        out_dr[i] = 1.0 - rssn_last * n / nulldev if nulldev > 0 else 0.0
-        ob, oa0 = _unstandardize(beta, x_mean, x_std, y_mean, intercept)
-        out_beta[:, i] = ob
-        out_a0[i] = oa0
-        out_df[i] = int(np.count_nonzero(beta))
-    return PathResult(
-        "gaussian", lam_path, out_a0, out_beta, out_df, out_dr, nulldev,
-        getattr(provider, "passes", 1), x_mean, x_std,
+    L = _power_iter_L(lambda v: provider.gradient_gaussian(v, y_mean)[0] + B[:, 0], B.shape[0])
+    return _fista_path(
+        "gaussian", provider, grad, L, B, np.array([y_mean]), nulldev,
+        lambda rssn: 1.0 - rssn * n / nulldev, x_mean, x_std,
+        free_b0=False, tol=thresh, alpha=alpha, nlambda=nlambda,
+        lambda_min_ratio=lambda_min_ratio, lambdas=lambdas, intercept=intercept,
+        maxit=maxit, penalty_factor=penalty_factor, exclude=exclude,
+        lower_limits=lower_limits, upper_limits=upper_limits,
     )
-
-
-def _power_iter_L(provider, p: int, iters: int = 6) -> float:
-    """lambda_max of the standardized Gram via distributed power
-    iteration (one cov_vec pass per step) — never materializes p²."""
-    rng = np.random.default_rng(0)
-    v = rng.normal(size=p)
-    v /= np.linalg.norm(v)
-    L = 1.0
-    for _ in range(iters):
-        cv = provider.cov_vec(v)
-        nrm = float(np.linalg.norm(cv))
-        if nrm == 0:
-            break
-        L = nrm
-        v = cv / nrm
-    return L * 1.05
 
 
 def binomial_path_fista(
@@ -528,91 +662,29 @@ def binomial_path_fista(
     Spark-shaped). Lipschitz bound: max(1, lambda_max(C))/4 for the
     centered extended design [1, X~]."""
     mom = mom or provider.moments_diag()
-    n = mom.n
     x_mean, x_std = _standardization(mom, standardize, intercept)
     provider.set_standardization(x_mean, 1.0 / x_std)
-    inv = 1.0 / x_std
-    pbar = float(mom.y_mean[0])
     p = len(x_mean)
-    has_off = getattr(provider, "has_offset", False)
-    if not has_off:
-        ll_null = n * (pbar * np.log(max(pbar, 1e-300)) + (1 - pbar) * np.log(max(1 - pbar, 1e-300)))
-        if intercept:
-            b = (mom.sum_xy[:, 0] / n - mom.x_mean * pbar) * inv
-        else:
-            b = (mom.sum_xy[:, 0] / n) * inv
-        b0 = float(np.log(pbar / (1 - pbar))) if intercept else 0.0
+    if not getattr(provider, "has_offset", False):
+        b0, ll_null = _binomial_null(mom, intercept)
+        B = _xty(mom, x_std, intercept)
     else:
-        # offset: intercept-only Newton via empty-column IRLS passes
-        # (O(n) each), then lambda_max off the null gradient
-        b0 = 0.0
+        # offset: the intercept-only Newton runs on empty-column IRLS
+        # passes (O(n) each), then lambda_max reads off the null gradient
         ecols = np.zeros(0, dtype=np.intp)
-        for _ in range(10):
-            sw, _, _, _, swz, ll = provider.irls_binomial(np.zeros(0), b0, cols=ecols)
-            if not intercept:
-                break
-            b0_new = swz / sw
-            if abs(b0_new - b0) <= 1e-10 * max(1.0, abs(b0_new)):
-                b0 = b0_new
-                break
-            b0 = b0_new
-        ll_null = ll
-        g0, _, _ = provider.grad_binomial(np.zeros(p), b0)
-        b = -g0
+        b0, ll_null, _ = _binomial_null_offset(
+            lambda b0_: provider.irls_binomial(np.zeros(0), b0_, cols=ecols), intercept)
+        B = -provider.grad_binomial(np.zeros(p), b0)[0][:, None]
     nulldev = -2.0 * ll_null
-    L = max(1.0, _power_iter_L(provider, p)) / 4.0
-    pf, lo, hi = _penalty_options(p, x_std, penalty_factor, exclude, lower_limits, upper_limits)
-    boxed = lo is not None or hi is not None
-
     # binomial lambda_max: gradient of the NULL model (families.h:198)
-    lambda_max = _lambda_max_scaled(np.abs(b), alpha, pf)
-    lam_path = _lambda_path(lambda_max, nlambda, lambda_min_ratio, lambdas)
-    nl = len(lam_path)
-
-    coef = np.zeros(p)
-    out_beta = np.zeros((p, nl))
-    out_a0 = np.zeros(nl)
-    out_df = np.zeros(nl, dtype=int)
-    out_dr = np.zeros(nl)
-    pf_zero = pf is not None and bool(np.any(pf == 0))
-    auto_path = (lambdas is None or len(lambdas) == 0) and alpha > 0 and not pf_zero
-    ll = ll_null
-    for i, lam in enumerate(lam_path):
-        if auto_path and i == 0:
-            out_a0[i] = b0 if intercept else 0.0
-            continue
-        l1v, l2v, l2max = _fista_terms(lam, alpha, pf)
-        step = 1.0 / (L + l2max)
-        z, zb = coef.copy(), b0
-        t = 1.0
-        prev, prevb = coef.copy(), b0
-        for _ in range(maxit):
-            g, gb, ll = provider.grad_binomial(z, zb)
-            cand = z - step * (g + l2v * z)
-            new = soft_threshold(cand, step * l1v)
-            if boxed:
-                new = np.clip(new, lo if lo is not None else -np.inf,
-                              hi if hi is not None else np.inf)
-            newb = zb - step * gb if intercept else 0.0
-            t_new = (1.0 + np.sqrt(1.0 + 4.0 * t * t)) / 2.0
-            z = new + (t - 1.0) / t_new * (new - prev)
-            zb = newb + (t - 1.0) / t_new * (newb - prevb)
-            delta = max(float(np.max(np.abs(new - prev))), abs(newb - prevb))
-            scale = max(float(np.max(np.abs(new))) if p else 0.0, abs(newb), 1e-12)
-            prev, prevb = new, newb
-            t = t_new
-            if delta <= max(thresh, 1e-7) * scale:
-                break
-        coef, b0 = prev, prevb
-        _, _, ll = provider.grad_binomial(coef, b0)
-        out_dr[i] = 1.0 - (-2.0 * ll) / nulldev if nulldev > 0 else 0.0
-        ob, _ = _unstandardize(coef, x_mean, x_std, 0.0, intercept)
-        out_beta[:, i] = ob
-        out_a0[i] = b0 - float(x_mean @ ob) if intercept else 0.0
-        out_df[i] = int(np.count_nonzero(coef))
-    return PathResult(
-        "binomial", lam_path, out_a0, out_beta, out_df, out_dr, nulldev,
-        getattr(provider, "passes", 1), x_mean, x_std,
+    return _fista_path(
+        "binomial", provider, lambda Z, zb: provider.grad_binomial(Z[0], zb[0]),
+        max(1.0, _power_iter_L(provider.cov_vec, p)) / 4.0, B, np.array([b0]), nulldev,
+        lambda ll: 1.0 - (-2.0 * ll) / nulldev, x_mean, x_std,
+        free_b0=intercept, tol=max(thresh, 1e-7), alpha=alpha, nlambda=nlambda,
+        lambda_min_ratio=lambda_min_ratio, lambdas=lambdas, intercept=intercept,
+        maxit=maxit, penalty_factor=penalty_factor, exclude=exclude,
+        lower_limits=lower_limits, upper_limits=upper_limits,
     )
 
 
@@ -646,97 +718,27 @@ def multinomial_path_fista(
     applied here on the isotropic FISTA step where it has a closed form
     even though per-class IRLS curvatures differ."""
     mom = mom or provider.moments_diag()
-    n = mom.n
     k = len(mom.sum_y)
     x_mean, x_std = _standardization(mom, standardize, intercept)
     provider.set_standardization(x_mean, 1.0 / x_std)
-    inv = 1.0 / x_std
-    pri = mom.y_mean
     p = len(x_mean)
-    has_off = getattr(provider, "has_offset", False)
-    if not has_off:
-        ll_null = float(n * np.sum(pri * np.log(np.maximum(pri, 1e-300))))
-        if intercept:
-            B = (mom.sum_xy / n - np.outer(mom.x_mean, pri)) * inv[:, None]
-        else:
-            B = (mom.sum_xy / n) * inv[:, None]
-        b0s = np.log(np.maximum(pri, 1e-300)) if intercept else np.zeros(k)
-        b0s = b0s - b0s.mean() if intercept else b0s
+    if not getattr(provider, "has_offset", False):
+        b0s, ll_null = _multinomial_null(mom, intercept)
+        B = _xty(mom, x_std, intercept)
     else:
         # n×k offset: null intercepts/gradient have no moment closed form
-        b0s, ll_null, g0 = _multinomial_null_offset(provider, pri, k, p, intercept)
+        b0s, ll_null, g0 = _multinomial_null_offset(provider, mom.y_mean, k, p, intercept)
         B = -g0.T  # (p, k) null gradient flips sign: B = <x~, y - P0>/n
     nulldev = -2.0 * ll_null
     # softmax hessian <= (1/2) I ⊗ C  (tighter 1/4 holds per class;
     # 1/2 is the safe multiclass bound)
-    L = max(1.0, _power_iter_L(provider, p)) / 2.0
-
-    pf, _, _ = _penalty_options(p, x_std, penalty_factor, exclude)
-    # grouped: all-zero iff every row's null-gradient 2-norm is within
-    # the group threshold, so lambda_max = max_j ||B_j.||_2 / (alpha pf_j)
-    if grouped:
-        lambda_max = _lambda_max_scaled(np.sqrt((B * B).sum(axis=1)), alpha, pf)
-    else:
-        lambda_max = _lambda_max_scaled(np.max(np.abs(B), axis=1), alpha, pf)
-    lam_path = _lambda_path(lambda_max, nlambda, lambda_min_ratio, lambdas)
-    nl = len(lam_path)
-
-    coefs = np.zeros((k, p))
-    out_beta = np.zeros((k, p, nl))
-    out_a0 = np.zeros((k, nl))
-    out_df = np.zeros(nl, dtype=int)
-    out_dfmat = np.zeros((k, nl), dtype=int)
-    out_dr = np.zeros(nl)
-    pf_zero = pf is not None and bool(np.any(pf == 0))
-    auto_path = (lambdas is None or len(lambdas) == 0) and alpha > 0 and not pf_zero
-    for i, lam in enumerate(lam_path):
-        if auto_path and i == 0:
-            out_a0[:, i] = b0s - b0s.mean() if intercept else 0.0
-            continue
-        l1v, l2v, l2max = _fista_terms(lam, alpha, pf)
-        step = 1.0 / (L + l2max)
-        z, zb = coefs.copy(), b0s.copy()
-        t = 1.0
-        prev, prevb = coefs.copy(), b0s.copy()
-        ll = ll_null
-        for _ in range(maxit):
-            G, gb, ll = provider.grad_multinomial(z, zb)
-            # z is (k, p); per-feature penalty vectors broadcast over rows
-            l2row = l2v if np.isscalar(l2v) else l2v[None, :]
-            cand = z - step * (G + l2row * z)
-            if grouped:
-                # row-wise group soft-threshold over the k classes of
-                # each feature (cand is (k, p); groups are columns);
-                # an infinite factor drives scl to 0 = excluded
-                nrm = np.sqrt((cand * cand).sum(axis=0))
-                scl = np.maximum(0.0, 1.0 - step * l1v / np.maximum(nrm, 1e-300))
-                new = cand * scl
-            else:
-                new = soft_threshold(cand, step * (l1v if np.isscalar(l1v) else l1v[None, :]))
-            newb = zb - step * gb if intercept else np.zeros(k)
-            t_new = (1.0 + np.sqrt(1.0 + 4.0 * t * t)) / 2.0
-            z = new + (t - 1.0) / t_new * (new - prev)
-            zb = newb + (t - 1.0) / t_new * (newb - prevb)
-            delta = max(float(np.max(np.abs(new - prev))), float(np.max(np.abs(newb - prevb))))
-            scale = max(float(np.max(np.abs(new))), float(np.max(np.abs(newb))), 1e-12)
-            prev, prevb = new, newb
-            t = t_new
-            if delta <= max(thresh, 1e-7) * scale:
-                break
-        coefs, b0s = prev, prevb
-        _, _, ll = provider.grad_multinomial(coefs, b0s)
-        out_dr[i] = 1.0 - (-2.0 * ll) / nulldev if nulldev > 0 else 0.0
-        for c in range(k):
-            ob, _ = _unstandardize(coefs[c], x_mean, x_std, 0.0, intercept)
-            out_beta[c, :, i] = ob
-            out_a0[c, i] = b0s[c] - float(x_mean @ ob) if intercept else 0.0
-            out_dfmat[c, i] = int(np.count_nonzero(coefs[c]))
-        out_df[i] = int(np.count_nonzero(np.any(coefs != 0.0, axis=0)))
-        if intercept:
-            out_a0[:, i] -= out_a0[:, i].mean()
-    return PathResult(
-        "multinomial", lam_path, out_a0, out_beta, out_df, out_dr, nulldev,
-        getattr(provider, "passes", 1), x_mean, x_std, out_dfmat,
+    return _fista_path(
+        "multinomial", provider, provider.grad_multinomial,
+        max(1.0, _power_iter_L(provider.cov_vec, p)) / 2.0, B, b0s, nulldev,
+        lambda ll: 1.0 - (-2.0 * ll) / nulldev, x_mean, x_std,
+        free_b0=intercept, tol=max(thresh, 1e-7), grouped=grouped, alpha=alpha,
+        nlambda=nlambda, lambda_min_ratio=lambda_min_ratio, lambdas=lambdas,
+        intercept=intercept, maxit=maxit, penalty_factor=penalty_factor, exclude=exclude,
     )
 
 
@@ -846,9 +848,8 @@ def _irls_path_loop(
     provider=None,
 ) -> PathResult:
     """The shared screened/unscreened IRLS path loop behind
-    binomial_path and poisson_path (previously two ~90-line verbatim
-    copies that had to be edited in lockstep). Family-specific pieces
-    enter as callables: ``irls_fn(coef, b0, cols=None)`` returns the
+    binomial_path and poisson_path. Family-specific pieces enter as
+    callables: ``irls_fn(coef, b0, cols=None)`` returns the
     weighted-quadratic stats + the family's fit statistic (binomial:
     log-likelihood; poisson: deviance), ``grad_fn(coef, b0)`` the full
     penalized-scale gradient, ``loss_of(stat)`` the per-pass objective
@@ -859,15 +860,7 @@ def _irls_path_loop(
     refits — is family-independent and lives here exactly once."""
     coef = np.zeros(p)
     b0 = b0_null
-    nl = len(lam_path)
-    out_beta = np.zeros((p, nl))
-    out_a0 = np.zeros(nl)
-    out_df = np.zeros(nl, dtype=int)
-    out_dr = np.zeros(nl)
-    out_beta_r = np.zeros((p, nl)) if relax else None
-    out_a0_r = np.zeros(nl) if relax else None
-    out_dr_r = np.zeros(nl) if relax else None
-
+    out = _PathOutput(family, lam_path, 1, x_mean, x_std, intercept, relax=relax)
     losses: list = []
     prev_sol: list[tuple[float, np.ndarray, float]] = []  # (lam, coef, b0)
     stat = stat_null
@@ -875,9 +868,10 @@ def _irls_path_loop(
         if auto_path and i == 0:
             # at lambda_max every coefficient is zero by construction
             # (KKT with equality) — emit the null model directly
-            out_a0[i] = b0_null
+            out.record(i, coef, b0_null, 0.0)
             if relax:
-                out_a0_r[i] = b0_null  # empty support: relaxed == null model
+                # empty support: relaxed == null model
+                out.record(i, coef, b0_null, 0.0, relaxed=True)
             losses.append([first_point_loss])
             continue
         # secant warm-start: extrapolate the solution curve from the two
@@ -962,23 +956,11 @@ def _irls_path_loop(
         if len(prev_sol) > 2:
             prev_sol.pop(0)
         losses.append(lam_losses)
-        out_dr[i] = devr_of(stat) if nulldev > 0 else 0.0
-        ob, _ = _unstandardize(coef, x_mean, x_std, 0.0, intercept)
-        out_beta[:, i] = ob
-        out_a0[i] = b0 - float(x_mean @ ob) if intercept else 0.0
-        out_df[i] = int(np.count_nonzero(coef))
+        out.record(i, coef, b0, devr_of(stat) if nulldev > 0 else 0.0)
         if relax:
             rfull, rb0, stat_r = relax_refit(coef, b0)
-            out_dr_r[i] = devr_of(stat_r) if nulldev > 0 else 0.0
-            orb, _ = _unstandardize(rfull, x_mean, x_std, 0.0, intercept)
-            out_beta_r[:, i] = orb
-            out_a0_r[i] = rb0 - float(x_mean @ orb) if intercept else 0.0
-    return PathResult(
-        family, lam_path, out_a0, out_beta, out_df, out_dr, nulldev,
-        # read AFTER the loop: the provider increments passes per scan
-        getattr(provider, "passes", 1), x_mean, x_std, loss=losses,
-        a0_relaxed=out_a0_r, beta_relaxed=out_beta_r, dev_ratio_relaxed=out_dr_r,
-    )
+            out.record(i, rfull, rb0, devr_of(stat_r) if nulldev > 0 else 0.0, relaxed=True)
+    return out.result(nulldev, provider, loss=losses)
 
 
 def binomial_path(
@@ -1003,39 +985,22 @@ def binomial_path(
     mom = mom or provider.moments()
     n = mom.n
     x_mean, x_std = _standardization(mom, standardize, intercept)
-    C, B = _gram(mom, x_mean, x_std, intercept)
-    b = B[:, 0]
+    b = _xty(mom, x_std, intercept)[:, 0]
     provider.set_standardization(x_mean, 1.0 / x_std)
     p = len(b)
     pf, lo, hi = _penalty_options(p, x_std, penalty_factor, exclude, lower_limits, upper_limits)
 
-    has_off = getattr(provider, "has_offset", False)
     prev_stats = None  # last IRLS quadratic, anchored at the previous solution
-    if not has_off:
-        # closed forms: the weighted moments already fold sample weights
-        # into pbar and the Gram, so lambda_max = max|x̃ᵀ w̃(y-ȳ)|/n holds
-        # weighted or not
-        pbar = float(mom.y_mean[0])
-        ll_null = n * (pbar * np.log(max(pbar, 1e-300)) + (1 - pbar) * np.log(max(1 - pbar, 1e-300)))
-        b0 = float(np.log(pbar / (1 - pbar))) if intercept else 0.0
+    if not getattr(provider, "has_offset", False):
+        # closed form; the Gram's b gives lambda_max = max|x̃ᵀ w̃(y-ȳ)|/n
+        b0, ll_null = _binomial_null(mom, intercept)
     else:
-        # with a per-row offset the null model has no closed form: Newton
-        # on the intercept (each step is one IRLS pass; the WLS solve of
-        # the intercept-only quadratic IS the Newton step), then read
-        # lambda_max off the null gradient x̃ᵀ w̃ (y-mu0)/n = (swxz-b0·swx)/n
-        b0 = 0.0
-        sw = swx = swxz = None
-        for _ in range(10):
-            sw, swx, swxx, swxz, swz, ll = provider.irls_binomial(np.zeros(p), b0)
-            prev_stats = (sw, swx, swxx, swxz, swz)
-            if not intercept:
-                break
-            b0_new = swz / sw
-            if abs(b0_new - b0) <= 1e-10 * max(1.0, abs(b0_new)):
-                b0 = b0_new
-                break
-            b0 = b0_new
-        ll_null = ll
+        # the full-p Newton passes leave a warm quadratic for the first
+        # path point; lambda_max reads off the null gradient
+        # x̃ᵀ w̃ (y-mu0)/n = (swxz-b0·swx)/n
+        b0, ll_null, prev_stats = _binomial_null_offset(
+            lambda b0_: provider.irls_binomial(np.zeros(p), b0_), intercept)
+        _, swx, _, swxz, _ = prev_stats
         b = (swxz - b0 * swx) / n
 
     nulldev = -2.0 * ll_null
@@ -1052,11 +1017,6 @@ def binomial_path(
             outer_maxit=outer_maxit, lo=lo, hi=hi, stat0=ll_null,
         )
 
-    # lambda_max shortcut applies on auto paths with every feature
-    # penalized (see _irls_path_loop); ridge (alpha=0) and zero
-    # penalty factors fit the first point for real
-    pf_zero = pf is not None and bool(np.any(pf == 0))
-    auto_path = (lambdas is None or len(lambdas) == 0) and alpha > 0 and not pf_zero
     # sequential strong-rule screening: pays once p is large enough that
     # the O(n·p²) quadratic dominates the extra O(n·p) gradient pass; the
     # KKT re-check restores exactness, so the rule being heuristic costs
@@ -1076,7 +1036,7 @@ def binomial_path(
         p=p, n=n, lam_path=lam_path, lambda_max=lambda_max, alpha=alpha,
         pf=pf, lo=lo, hi=hi, intercept=intercept, thresh=thresh,
         maxit=maxit, outer_maxit=outer_maxit, do_screen=do_screen,
-        auto_path=auto_path, b0_null=b0, stat_null=ll_null,
+        auto_path=_auto_path(lambdas, alpha, pf), b0_null=b0, stat_null=ll_null,
         nulldev=nulldev, first_point_loss=-ll_null / n,
         prev_stats=prev_stats, x_mean=x_mean, x_std=x_std,
         relax=relax, relax_refit=_relax_refit, provider=provider,
@@ -1145,8 +1105,6 @@ def poisson_path(
             outer_maxit=outer_maxit, lo=lo, hi=hi, stat0=nulldev,
         )
 
-    pf_zero = pf is not None and bool(np.any(pf == 0))
-    auto_path = (lambdas is None or len(lambdas) == 0) and alpha > 0 and not pf_zero
     do_screen = (
         ((screen is True) or (screen == "auto" and p > 100))
         and alpha > 0
@@ -1159,37 +1117,11 @@ def poisson_path(
         p=p, n=n, lam_path=lam_path, lambda_max=lambda_max, alpha=alpha,
         pf=pf, lo=lo, hi=hi, intercept=intercept, thresh=thresh,
         maxit=maxit, outer_maxit=outer_maxit, do_screen=do_screen,
-        auto_path=auto_path, b0_null=b0_null, stat_null=nulldev,
+        auto_path=_auto_path(lambdas, alpha, pf), b0_null=b0_null, stat_null=nulldev,
         nulldev=nulldev, first_point_loss=nulldev / (2.0 * n),
         prev_stats=(sw, swx, swxx, swxz, swz), x_mean=x_mean, x_std=x_std,
         relax=relax, relax_refit=_relax_refit, provider=provider,
     )
-
-
-def _multinomial_null_offset(provider, pri, k: int, p: int, intercept: bool):
-    """Intercept-only softmax MLE under a fixed n×k offset, by the
-    balancing fixed point b0_c <- b0_c + log(ȳ_c / P̄_c) (each iteration
-    is one gradient pass; the score of the intercept-only likelihood is
-    exactly P̄_c - ȳ_c, so the update has the MLE as its only fixed
-    point). Returns (b0s, ll_null, null_gradient (k,p))."""
-    zeros = np.zeros((k, p))
-    if not intercept:
-        g, _, ll = provider.grad_multinomial(zeros, np.zeros(k))
-        return np.zeros(k), ll, g
-    b0s = np.log(np.maximum(pri, 1e-300))
-    b0s = b0s - b0s.mean()
-    g = None
-    ll = 0.0
-    for _ in range(50):
-        g, gb, ll = provider.grad_multinomial(zeros, b0s)
-        pbar = gb + pri  # colmeans(P) = colmeans(P-Y) + colmeans(Y)
-        step = np.log(np.maximum(pri, 1e-300) / np.maximum(pbar, 1e-300))
-        b0s = b0s + step
-        b0s = b0s - b0s.mean()
-        if float(np.max(np.abs(step))) <= 1e-12:
-            break
-    g, _, ll = provider.grad_multinomial(zeros, b0s)
-    return b0s, ll, g
 
 
 def multinomial_path(
@@ -1212,18 +1144,15 @@ def multinomial_path(
     n = mom.n
     k = len(mom.sum_y)
     x_mean, x_std = _standardization(mom, standardize, intercept)
-    C, B = _gram(mom, x_mean, x_std, intercept)  # B[:, c] = <x~, y_c - pbar_c>/n
+    B = _xty(mom, x_std, intercept)  # B[:, c] = <x~, y_c - pbar_c>/n
     provider.set_standardization(x_mean, 1.0 / x_std)
 
     pri = mom.y_mean  # class priors
     p = B.shape[0]
     pf, _, _ = _penalty_options(p, x_std, penalty_factor, exclude)
-    has_off = getattr(provider, "has_offset", False)
-    if not has_off:
-        ll_null = float(n * np.sum(pri * np.log(np.maximum(pri, 1e-300))))
+    if not getattr(provider, "has_offset", False):
+        b0s, ll_null = _multinomial_null(mom, intercept)
         lambda_max = _lambda_max_scaled(np.max(np.abs(B), axis=1), alpha, pf)
-        b0s = np.log(np.maximum(pri, 1e-300)) if intercept else np.zeros(k)
-        b0s = b0s - b0s.mean() if intercept else b0s
     else:
         # n×k offset: the null intercepts have no closed form. The
         # balancing fixed point b0_c += log(ȳ_c / P̄_c) (each step is one
@@ -1234,20 +1163,14 @@ def multinomial_path(
         lambda_max = _lambda_max_scaled(np.max(np.abs(g0), axis=0), alpha, pf)
     nulldev = -2.0 * ll_null
     lam_path = _lambda_path(lambda_max, nlambda, lambda_min_ratio, lambdas)
-    nl = len(lam_path)
 
     coefs = np.zeros((k, p))
-    out_beta = np.zeros((k, p, nl))
-    out_a0 = np.zeros((k, nl))
-    out_df = np.zeros(nl, dtype=int)
-    out_dfmat = np.zeros((k, nl), dtype=int)
-    out_dr = np.zeros(nl)
-    pf_zero = pf is not None and bool(np.any(pf == 0))
-    auto_path = (lambdas is None or len(lambdas) == 0) and alpha > 0 and not pf_zero
+    out = _PathOutput("multinomial", lam_path, k, x_mean, x_std, intercept)
+    auto_path = _auto_path(lambdas, alpha, pf)
     prev_sol: list[tuple[float, np.ndarray, np.ndarray]] = []
     for i, lam in enumerate(lam_path):
         if auto_path and i == 0:
-            out_a0[:, i] = b0s - b0s.mean() if intercept else 0.0
+            out.record(i, coefs, b0s, 0.0)
             continue
         # secant warm-start along the path (see binomial_path)
         if len(prev_sol) >= 2:
@@ -1283,17 +1206,5 @@ def multinomial_path(
         prev_sol.append((float(lam), coefs.copy(), b0s.copy()))
         if len(prev_sol) > 2:
             prev_sol.pop(0)
-        out_dr[i] = 1.0 - (-2.0 * ll) / nulldev if nulldev > 0 else 0.0
-        for c in range(k):
-            ob, _ = _unstandardize(coefs[c], x_mean, x_std, 0.0, intercept)
-            out_beta[c, :, i] = ob
-            out_a0[c, i] = b0s[c] - float(x_mean @ ob) if intercept else 0.0
-            out_dfmat[c, i] = int(np.count_nonzero(coefs[c]))
-        out_df[i] = int(np.count_nonzero(np.any(coefs != 0.0, axis=0)))
-        # reference R/sgdnet.R:409 recenters multinomial intercepts to sum to 0
-        if intercept:
-            out_a0[:, i] -= out_a0[:, i].mean()
-    return PathResult(
-        "multinomial", lam_path, out_a0, out_beta, out_df, out_dr, nulldev,
-        getattr(provider, "passes", 1), x_mean, x_std, out_dfmat,
-    )
+        out.record(i, coefs, b0s, 1.0 - (-2.0 * ll) / nulldev if nulldev > 0 else 0.0)
+    return out.result(nulldev, provider)

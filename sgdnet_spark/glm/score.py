@@ -374,27 +374,36 @@ def _measure(fam: str, type_measure: str, etas: list[F.Column], y, mean, classes
     Columns (mirrors score_np). ``y`` is the label: the numeric response
     Column for univariate families (binomial: 0/1, NaN-poisoned), the
     raw label column for multinomial, one Column per response for
-    mgaussian."""
+    mgaussian. A NULL or out-of-class multinomial label NaN-poisons
+    every measure, as ``_binomial_y`` does for binomial."""
+    term = _row_term(fam, type_measure, etas, y, classes)
+    if fam == "multinomial":
+        term = F.when(y.isin(list(classes)), term).otherwise(F.lit(float("nan")))
+    return mean(term)
+
+
+def _row_term(fam: str, type_measure: str, etas: list[F.Column], y, classes) -> F.Column:
+    """The per-row term that ``_measure`` averages."""
     if type_measure == "class":
         if fam == "multinomial":
             pred = class_head(etas, [str(c) for c in classes])
-            return mean((pred != y.cast("string")).cast("double"))
+            return (pred != y.cast("string")).cast("double")
         miss = (response(fam, etas)[0] > 0.5).cast("double") - y
-        return mean(miss * miss)
+        return miss * miss
     mu = response(fam, etas)
     if type_measure == "deviance" and fam == "binomial":
         pc = clamp_prob(mu[0])
-        return mean(F.lit(-2.0) * (y * F.log(pc) + (F.lit(1.0) - y) * F.log(F.lit(1.0) - pc)))
+        return F.lit(-2.0) * (y * F.log(pc) + (F.lit(1.0) - y) * F.log(F.lit(1.0) - pc))
     if type_measure == "deviance" and fam == "poisson":
         ylogy = F.when(y > 0, y * F.log(y / mu[0])).otherwise(F.lit(0.0))
-        return mean(F.lit(2.0) * (ylogy - (y - mu[0])))
+        return F.lit(2.0) * (ylogy - (y - mu[0]))
     if type_measure == "deviance" and fam == "multinomial":
-        # -2 log p_trueclass; a label outside the classes (or NULL)
-        # leaves the when ladder NULL, poisoned to NaN by the clamp
+        # -2 log p_trueclass; a NULL link leaves ptrue NULL, poisoned to
+        # NaN by the clamp
         ptrue = F.when(y == F.lit(classes[0]), mu[0])
         for c, p in zip(classes[1:], mu[1:]):
             ptrue = ptrue.when(y == F.lit(c), p)
-        return mean(F.lit(-2.0) * F.log(clamp_prob(ptrue, poison_null=True)))
+        return F.lit(-2.0) * F.log(clamp_prob(ptrue, poison_null=True))
     # mse, mae, and the gaussian/mgaussian deviance (= mse): per row, the
     # sum over the k responses of (response - target)^2 resp. |.|
     if fam == "multinomial":
@@ -407,7 +416,7 @@ def _measure(fam: str, type_measure: str, etas: list[F.Column], y, mean, classes
         term = F.abs(d) if type_measure == "mae" else d * d
         row = term if row is None else row + term
     # binomial: reference score.R:101's two-column form, 2·(p - y)^2
-    return mean(row * F.lit(2.0) if fam == "binomial" else row)
+    return row * F.lit(2.0) if fam == "binomial" else row
 
 
 def score_links(fit, df: DataFrame, etas: list[list[F.Column]], label_col,

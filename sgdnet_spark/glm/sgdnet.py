@@ -722,71 +722,53 @@ def sgdnet(
             lambdas=lambdas, standardize=standardize, intercept=intercept,
             thresh=min(thresh, 1e-6), maxit=max(maxit, 100), mom=mom, **fkw,
         )
-        if isinstance(provider, SparkXY):
-            provider.unpersist()
-        train = dict(
-            df=df, feature_cols=orig_features, label_col=label_col, family=family,
-            alpha=alpha, maxit=maxit, standardize=standardize, intercept=intercept,
-            thresh=thresh, standardize_response=standardize_response, solver=solver,
-            weights_col=weights_col, offset_col=offset_col,
-            type_multinomial=type_multinomial,
-            penalty_factor=penalty_factor, exclude=exclude,
-            lower_limits=lower_limits, upper_limits=upper_limits,
-        )
-        return SgdnetFit(
-            family=family, alpha=alpha, lambdas=res.lambdas, a0=res.a0, beta=res.beta,
-            df=res.df, dev_ratio=res.dev_ratio, nulldev=res.nulldev, npasses=res.npasses,
-            nobs=n, feature_names=feature_cols, classnames=classnames,
-            dfmat=res.dfmat, intercept=intercept,
-            standardize=standardize, offset=offset_col is not None,
-            grouped=grouped_multi, _train=train,
-        )
-    if solver == "fista":
+    elif solver == "fista":
         raise ValueError("solver='fista' supports gaussian, binomial, multinomial")
-    if fast is not None:
-        n = mom.n  # classes, Y, and moments all came from the one collect
-    elif solver == "local":
-        # force the numpy provider end-to-end (tests / debugging)
-        provider = provider.to_local(max_cells=float("inf"))
-        mom = provider.moments()
-        n = mom.n
     else:
-        # moments always come from the one-pass JVM/Arrow aggregation — they
-        # are needed regardless of solver and also tell us n for the
-        # local-vs-distributed decision without an extra count() scan.
-        mom = provider.moments()
-        n = mom.n
-        if family in ("binomial", "multinomial", "poisson"):
-            # iterative families: collect once if it fits the driver budget
-            # (gaussian/mgaussian never collect — one Gram pass IS the fit)
-            if solver == "auto" and n * (p + k) <= collect_max_cells:
-                local = provider.to_local(max_cells=float("inf"))
-                local.passes += provider.passes
-                provider = local
-            else:
-                provider.cache()  # distributed IRLS passes reuse the frame
-    if lambda_min_ratio is None:
-        lambda_min_ratio = 0.01 if n < p else 1e-4
+        if fast is not None:
+            n = mom.n  # classes, Y, and moments all came from the one collect
+        elif solver == "local":
+            # force the numpy provider end-to-end (tests / debugging)
+            provider = provider.to_local(max_cells=float("inf"))
+            mom = provider.moments()
+            n = mom.n
+        else:
+            # moments always come from the one-pass JVM/Arrow aggregation — they
+            # are needed regardless of solver and also tell us n for the
+            # local-vs-distributed decision without an extra count() scan.
+            mom = provider.moments()
+            n = mom.n
+            if family in ("binomial", "multinomial", "poisson"):
+                # iterative families: collect once if it fits the driver budget
+                # (gaussian/mgaussian never collect — one Gram pass IS the fit)
+                if solver == "auto" and n * (p + k) <= collect_max_cells:
+                    local = provider.to_local(max_cells=float("inf"))
+                    local.passes += provider.passes
+                    provider = local
+                else:
+                    provider.cache()  # distributed IRLS passes reuse the frame
+        if lambda_min_ratio is None:
+            lambda_min_ratio = 0.01 if n < p else 1e-4
 
-    kwargs = dict(
-        alpha=alpha, nlambda=nlambda, lambda_min_ratio=lambda_min_ratio,
-        lambdas=lambdas, standardize=standardize, intercept=intercept,
-        thresh=min(thresh, 1e-6) if family in ("gaussian", "mgaussian") else max(thresh * 0.1, 1e-10),
-        maxit=maxit, mom=mom,
-        penalty_factor=penalty_factor, exclude=exclude,
-    )
-    if family in ("gaussian", "binomial", "poisson"):
-        kwargs.update(lower_limits=lower_limits, upper_limits=upper_limits, relax=relax)
-    if family == "gaussian":
-        res = path_mod.gaussian_path(provider, **kwargs)
-    elif family == "mgaussian":
-        res = path_mod.mgaussian_path(provider, standardize_response=standardize_response, **kwargs)
-    elif family == "binomial":
-        res = path_mod.binomial_path(provider, **kwargs)
-    elif family == "poisson":
-        res = path_mod.poisson_path(provider, **kwargs)
-    else:
-        res = path_mod.multinomial_path(provider, **kwargs)
+        kwargs = dict(
+            alpha=alpha, nlambda=nlambda, lambda_min_ratio=lambda_min_ratio,
+            lambdas=lambdas, standardize=standardize, intercept=intercept,
+            thresh=min(thresh, 1e-6) if family in ("gaussian", "mgaussian") else max(thresh * 0.1, 1e-10),
+            maxit=maxit, mom=mom,
+            penalty_factor=penalty_factor, exclude=exclude,
+        )
+        if family in ("gaussian", "binomial", "poisson"):
+            kwargs.update(lower_limits=lower_limits, upper_limits=upper_limits, relax=relax)
+        if family == "gaussian":
+            res = path_mod.gaussian_path(provider, **kwargs)
+        elif family == "mgaussian":
+            res = path_mod.mgaussian_path(provider, standardize_response=standardize_response, **kwargs)
+        elif family == "binomial":
+            res = path_mod.binomial_path(provider, **kwargs)
+        elif family == "poisson":
+            res = path_mod.poisson_path(provider, **kwargs)
+        else:
+            res = path_mod.multinomial_path(provider, **kwargs)
 
     if isinstance(provider, SparkXY):
         provider.unpersist()
@@ -819,6 +801,7 @@ def sgdnet(
         intercept=intercept,
         standardize=standardize,
         offset=offset_col is not None,
+        grouped=grouped_multi,
         a0_relaxed=res.a0_relaxed,
         beta_relaxed=res.beta_relaxed,
         dev_ratio_relaxed=res.dev_ratio_relaxed,

@@ -48,31 +48,34 @@ def assemble_sparse(df: DataFrame, idx_col: str, val_col: str, label_col,
     return df.select(*cols)
 
 
+def _csr(idx_lists: pd.Series, val_lists: pd.Series, p: int):
+    """A batch's (indices, values) list columns as its nonzeros: flat
+    (feature index, value, row) triplets. Enforces the input contract
+    0 <= index < p where it breaks: in the fit passes an index >= p
+    lengthens bincount output and SHIFTS the packed partial's segments
+    (partials then silently mis-sum), and in the link pass a negative
+    index would wrap around to the last coefficients."""
+    lens = np.fromiter((len(a) for a in idx_lists), dtype=np.int64, count=len(idx_lists))
+    idx = np.concatenate(idx_lists.tolist()).astype(np.int64)
+    val = np.concatenate(val_lists.tolist())
+    if len(idx):
+        mx, mn = int(idx.max()), int(idx.min())
+        if mx >= p or mn < 0:
+            raise ValueError(
+                f"sparse feature index out of range: saw {mn}..{mx} "
+                f"but p={p} (indices must be in [0, p))"
+            )
+    return idx, val, np.repeat(np.arange(len(lens)), lens)
+
+
 def _csr_batch(p: int):
     """Arrow batch decoder -> (idx, val, rows, y, w) for the sparse
-    kernels: the batch's nonzeros as flat (feature index, value, row)
-    triplets."""
+    kernels."""
 
     def decode(pdf: pd.DataFrame):
-        idx_lists = pdf[IDX_COL].to_numpy()
-        lens = np.fromiter((len(a) for a in idx_lists), dtype=np.int64, count=len(idx_lists))
-        idx = np.concatenate(idx_lists.tolist()).astype(np.int64)
-        val = np.concatenate(pdf[VAL_COL].to_numpy().tolist())
-        if len(idx):
-            # the input contract, enforced where it breaks: an index
-            # >= p lengthens bincount output and SHIFTS the packed
-            # partial's segments — partials then silently mis-sum
-            # (or fail with an inscrutable inhomogeneous-shape
-            # error when partitions disagree)
-            mx, mn = int(idx.max()), int(idx.min())
-            if mx >= p or mn < 0:
-                raise ValueError(
-                    f"sparse feature index out of range: saw {mn}..{mx} "
-                    f"but p={p} (indices must be in [0, p))"
-                )
+        idx, val, rows = _csr(pdf[IDX_COL], pdf[VAL_COL], p)
         y = pdf[LBL_COL].to_numpy(dtype=np.float64)
         w = pdf[W_COL].to_numpy(dtype=np.float64) if W_COL in pdf.columns else None
-        rows = np.repeat(np.arange(len(lens)), lens)
         return idx, val, rows, y, w
 
     return decode
@@ -178,13 +181,13 @@ def sgdnet_sparse(
     text features, n-gram spaces): every pass costs O(nnz), driver
     state is O(p·k), and the data is never densified on the cluster.
 
-    ``weights_col`` (round-5 extension, glmnet weights-sum-to-n
-    semantics like the dense API): per-row non-negative sample weights,
-    folded into the moments and every gradient pass at nnz cost.
-    Offsets are not supported on the sparse path.
+    ``weights_col`` (glmnet weights-sum-to-n semantics like the dense
+    API): per-row non-negative sample weights, folded into the moments
+    and every gradient pass at nnz cost. Offsets are not supported on
+    the sparse path.
 
-    ``penalty_factor``/``exclude`` (round-6, glmnet semantics; see
-    sgdnet()) ride the FISTA prox per-coordinate; ``lower_limits``/
+    ``penalty_factor``/``exclude`` (glmnet semantics; see sgdnet())
+    ride the FISTA prox per-coordinate; ``lower_limits``/
     ``upper_limits`` box constraints apply to gaussian and binomial.
     """
     from pyspark.sql import functions as F
@@ -394,7 +397,8 @@ def _sparse_links(df: DataFrame, idx_col: str, val_col: str,
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     cf3 = cf[None] if cf.ndim == 2 else cf
-    k, _, nl = cf3.shape
+    k, p1, nl = cf3.shape
+    p = p1 - 1
     names = [[f"__sp_eta_{i}_{c}" for c in range(k)] for i in range(nl)]
     schema = StructType(list(df.schema.fields)
                         + [StructField(n, DoubleType()) for row in names for n in row])
@@ -403,18 +407,7 @@ def _sparse_links(df: DataFrame, idx_col: str, val_col: str,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            idx_lists = pdf[idx_col].to_numpy()
-            val_lists = pdf[val_col].to_numpy()
-            lens = np.fromiter((len(a) for a in idx_lists), dtype=np.int64, count=len(idx_lists))
-            idx = (
-                np.concatenate([np.asarray(a, dtype=np.int64) for a in idx_lists])
-                if lens.sum() else np.zeros(0, dtype=np.int64)
-            )
-            val = (
-                np.concatenate([np.asarray(a, dtype=np.float64) for a in val_lists])
-                if lens.sum() else np.zeros(0)
-            )
-            rows = np.repeat(np.arange(len(lens)), lens)
+            idx, val, rows = _csr(pdf[idx_col], pdf[val_col], p)
             links = {}
             for i in range(nl):
                 for c in range(k):

@@ -1,6 +1,7 @@
 """Option-grid invariants — mirrors reference test-sparse.R /
 test-options.R structure: every family × intercept × alpha × standardize
-combination fits cleanly and honors basic path invariants."""
+combination fits cleanly and honors basic path invariants, on the
+Gram/IRLS drivers and on the FISTA drivers."""
 
 import numpy as np
 import pytest
@@ -34,6 +35,9 @@ DRIVERS = {
     "binomial": P.binomial_path,
     "multinomial": P.multinomial_path,
     "mgaussian": P.mgaussian_path,
+    "gaussian_path_fista": P.gaussian_path_fista,
+    "binomial_path_fista": P.binomial_path_fista,
+    "multinomial_path_fista": P.multinomial_path_fista,
 }
 
 
@@ -47,7 +51,7 @@ def test_grid(family, intercept, alpha, standardize):
     import zlib
 
     rng = np.random.default_rng(zlib.crc32(repr((family, intercept, alpha, standardize)).encode()))
-    x, y = _data(family, rng)
+    x, y = _data(family.split("_")[0], rng)
     res = DRIVERS[family](
         LocalXY(x, y), alpha=alpha, nlambda=5, lambda_min_ratio=1e-2,
         standardize=standardize, intercept=intercept,

@@ -296,6 +296,28 @@ def test_binomial_score_poisons_null_and_unseen_labels(spark):
             assert np.isnan(score_sparse(fit, df, "idx", "val", "y", m)).all(), (m, bad)
 
 
+def test_multinomial_score_poisons_null_and_unseen_labels(spark):
+    """The multinomial twin of the binomial poisoning test: a NULL or
+    out-of-class label NaN-poisons deviance, mse, mae and class alike,
+    dense and sparse (not an all-zero one-hot target, nor a dropped or
+    miscounted row)."""
+    from sgdnet_spark.glm.sparse import score_sparse
+
+    fit = _flat_fit("multinomial", classnames=["a", "b", "c"])
+    schema = "x0 double, x1 double, y string, idx array<int>, val array<double>"
+    clean = spark.createDataFrame([(0.1, 0.2, "a", [0, 1], [0.1, 0.2]),
+                                   (0.3, 0.4, "b", [0, 1], [0.3, 0.4]),
+                                   (0.5, 0.6, "c", [0, 1], [0.5, 0.6])], schema)
+    measures = ("deviance", "mse", "mae", "class")
+    for m in measures:
+        assert np.isfinite(score(fit, clean, ["x0", "x1"], "y", m)).all(), m
+    for bad in (None, "zzz"):
+        df = clean.union(spark.createDataFrame([(0.5, 0.5, bad, [0, 1], [0.5, 0.5])], schema))
+        for m in measures:
+            assert np.isnan(score(fit, df, ["x0", "x1"], "y", m)).all(), (m, bad)
+            assert np.isnan(score_sparse(fit, df, "idx", "val", "y", m)).all(), (m, bad)
+
+
 def test_weighted_score_skips_null_term_weights(spark, gauss_df):
     """Rows whose score term is NULL (NULL label) contribute neither to
     the numerator NOR the denominator: the weighted mean over the

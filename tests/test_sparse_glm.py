@@ -358,12 +358,25 @@ def test_sparse_null_labels_raise(spark):
 
 def test_sparse_index_out_of_range_raises(spark):
     """A feature index >= p must raise with the contract named, not
-    shift bincount segments into silently-garbage aggregates."""
+    shift bincount segments into silently-garbage aggregates; predict
+    and score on sparse rows hold the same contract (a negative index
+    must not wrap around to the last coefficients)."""
+    from sgdnet_spark.glm.sparse import predict_sparse, score_sparse
+
+    schema = "indices array<int>, vals array<double>, y double"
     rows = [([0, 5], [1.0, 2.0], 1.0), ([1], [1.0], 0.0)] * 5
-    df = spark.createDataFrame(rows, "indices array<int>, vals array<double>, y double")
+    df = spark.createDataFrame(rows, schema)
     with pytest.raises(Exception, match="out of range"):
         sgdnet_sparse(df, "indices", "vals", "y", p=4, family="gaussian",
                       nlambda=2, collect_max_cells=0)  # force distributed
+    ok = spark.createDataFrame([([i % 4], [float(i)], float(i)) for i in range(12)], schema)
+    fit = sgdnet_sparse(ok, "indices", "vals", "y", p=4, family="gaussian", nlambda=2)
+    for idx in (-1, 4):
+        bad = spark.createDataFrame([([idx], [1.0], 1.0)], schema)
+        with pytest.raises(Exception, match="out of range"):
+            predict_sparse(fit, bad, "indices", "vals").collect()
+        with pytest.raises(Exception, match="out of range"):
+            score_sparse(fit, bad, "indices", "vals", "y", "mse")
 
 
 def test_sparse_duplicate_indices_sum_consistently(spark):
